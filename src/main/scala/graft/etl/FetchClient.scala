@@ -5,18 +5,20 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.time.Duration
 
-/** Driver-side GraphQL fetch client (SURVEY.md §2.1 S1/S2, §2.10 C1–C5).
+/** GraphQL fetch client (SURVEY.md §2.1 S1/S2, §2.10 C1–C5).
   *
-  * Reproduces the reference's ingestion control flow — offset pagination at
-  * page size 500 until a short page, 3 retries with 2 s backoff on
-  * 502/503/504/timeouts, per-unit failure isolation (log + keep partial
-  * results), zero-result abort handled by the pipeline — with the transport
-  * pluggable so tests (and the zero-egress build env) never touch a network.
+  * Reproduces the reference's ingestion control flow — 3 retries with 2 s
+  * backoff on 502/503/504/timeouts, per-unit failure isolation (log + keep
+  * partial results), zero-result abort handled by the pipeline — with the
+  * transport pluggable so tests (and the zero-egress build env) never
+  * touch a network. The offset pagination loop lives in
+  * [[GraphQlApi.fetchCountryAreas]].
   *
-  * At cluster scale the fetch stays a driver-side (or per-partition via
-  * `mapPartitions` over a units Dataset) concern; results enter Spark as
-  * in-memory records via [[JsonSource.fromRecords]], never via a temp-file
-  * handoff.
+  * The client runs wherever its caller runs: on the driver under
+  * [[GraphQlApi.fetchAllAreas]], inside executor tasks under
+  * [[GraphQlApi.fetchAllAreasDistributed]]. Driver-side results enter
+  * Spark as in-memory records via [[JsonSource.fromRecords]], never via a
+  * temp-file handoff.
   */
 object FetchClient {
 
@@ -61,22 +63,6 @@ object FetchClient {
       if (attempt < policy.attempts) Thread.sleep(policy.backoffMs)
     }
     last.fold(throw _, identity)
-  }
-
-  /** Offset pagination: request pages of `pageSize` until a short page.
-    * `fetchPage(offset, limit)` returns the page's records (already
-    * unpacked from the GraphQL envelope by the caller). */
-  def paginate[A](pageSize: Int = 500)(fetchPage: (Int, Int) => Seq[A]): Seq[A] = {
-    val out = Seq.newBuilder[A]
-    var offset = 0
-    var done = false
-    while (!done) {
-      val page = fetchPage(offset, pageSize)
-      out ++= page
-      offset += pageSize
-      done = page.size < pageSize
-    }
-    out.result()
   }
 
   /** Fetch many units (e.g. countries), isolating per-unit failures: a

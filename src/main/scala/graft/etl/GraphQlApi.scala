@@ -1,6 +1,7 @@
 package graft.etl
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.core.{JsonParser, JsonProcessingException, JsonToken}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ArrayNode
 
 import scala.jdk.CollectionConverters._
@@ -17,12 +18,18 @@ import scala.jdk.CollectionConverters._
   *    or an `errors` key is a SOFT failure — the country contributes the
   *    pages fetched so far and the export continues (export.py:113-128).
   *
-  * Pages return the areas as raw JSON object strings: parsing into the
-  * pinned [[ClimbSchema.area]] shape happens distributed on executors via
-  * [[JsonSource.fromRecords]], and climb flattening + parent-field
-  * inheritance runs as the Spark-native [[Enrich.flattenAreas]] (the
-  * reference does both driver-side in Python, export.py:133-146 — same
-  * observable rows, verified by EtlSpec).
+  * Where it runs: [[fetchAllAreas]] fetches and splits every page on the
+  * driver; [[fetchAllAreasDistributed]] fetches only the country list
+  * there and fetches and splits each country's pages inside executor
+  * tasks. Splitting a page is a streaming scan that cuts each area's JSON
+  * text out of the body ([[parseAreasPage]]): no tree is built for the
+  * page and no area is re-serialized. Encoding those strings as rows and
+  * parsing them into the pinned [[ClimbSchema.area]] shape run in executor
+  * tasks via [[JsonSource.fromRecords]], and climb flattening +
+  * parent-field inheritance runs as the Spark-native
+  * [[Enrich.flattenAreas]] (the reference does all of this on one machine
+  * in Python, export.py:84-158 — same observable rows, verified by
+  * EtlSpec).
   */
 object GraphQlApi {
 
@@ -191,22 +198,71 @@ query($uuid: ID!) {
     parseArea(body)
   }
 
-  /** Unpack one areas-page envelope → raw JSON strings, one per area
-    * object (`data.areas[]`). Throws [[GraphQlErrors]] on an `errors` key
-    * (the per-country caller treats it as a soft abort, export.py:126-128). */
+  /** Unpack one areas-page envelope → raw JSON strings, one per element
+    * of `data.areas[]`, each cut out of `body` at its token offsets (char
+    * offsets: the parser reads the String, so they index it directly).
+    * The same result as reading the page into a tree, without the tree:
+    *  - an `errors` key anywhere at the root raises [[GraphQlErrors]], even
+    *    after `data` (the per-country caller treats it as a soft abort,
+    *    export.py:126-128);
+    *  - a missing or null `data`, or an `areas` that is not an array,
+    *    yields no areas;
+    *  - of duplicate keys the last one wins;
+    *  - a malformed body throws a `JsonProcessingException`: the whole
+    *    root value is tokenized before anything is returned. */
   def parseAreasPage(body: String): Seq[String] = {
-    val root = mapper.readTree(body)
-    if (root.has("errors")) throw GraphQlErrors(root.get("errors").toString)
-    root.path("data").path("areas") match {
-      case a: ArrayNode => a.elements().asScala.map(_.toString).toSeq
-      case _ => Seq.empty
-    }
+    val p = mapper.getFactory.createParser(body)
+    try {
+      var areas = Seq.empty[String]
+      var errors: Option[String] = None
+      p.nextToken()
+      eachField(p) {
+        case "errors" => errors = Some(mapper.readTree[JsonNode](p).toString)
+        case "data" => areas = dataAreas(p, body)
+        case _ => p.skipChildren()
+      }
+      errors.foreach(e => throw GraphQlErrors(e))
+      areas
+    } finally p.close()
   }
+
+  /** The `areas` elements of the `data` value the parser stands on, as
+    * substrings of `body`. */
+  private def dataAreas(p: JsonParser, body: String): Seq[String] = {
+    var areas = Seq.empty[String]
+    eachField(p) {
+      case "areas" if p.currentToken == JsonToken.START_ARRAY =>
+        val out = Vector.newBuilder[String]
+        while (p.nextToken() != JsonToken.END_ARRAY) {
+          val start = p.currentTokenLocation.getCharOffset.toInt
+          p.skipChildren()
+          p.finishToken() // a string element ends at its closing quote
+          out += body.substring(start, p.currentLocation.getCharOffset.toInt)
+        }
+        areas = out.result()
+      case "areas" => areas = Seq.empty; p.skipChildren()
+      case _ => p.skipChildren()
+    }
+    areas
+  }
+
+  /** Runs `f(key)` with the parser on each field's value of the object
+    * the parser stands on (`f` must consume the whole value); skips a
+    * value that is not an object. Leaves the parser on the value's last
+    * token. */
+  private def eachField(p: JsonParser)(f: String => Unit): Unit =
+    if (p.currentToken == JsonToken.START_OBJECT)
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val key = p.currentName
+        p.nextToken()
+        f(key)
+      }
+    else p.skipChildren()
 
   /** Fetch every areas page for one country, soft-failing to partial
     * results (export.py:84-158 semantics: retry ladder per page via
-    * [[FetchClient.postWithRetry]], then non-200 / errors / exhausted
-    * timeout returns what was fetched so far). */
+    * [[FetchClient.postWithRetry]], then non-200 / errors / a body that
+    * does not parse / exhausted timeout returns what was fetched so far). */
   def fetchCountryAreas(transport: FetchClient.Transport, apiUrl: String,
       country: String, pageSize: Int = AreasPageSize,
       policy: FetchClient.RetryPolicy = FetchClient.RetryPolicy()): Seq[String] = {
@@ -227,8 +283,8 @@ query($uuid: ID!) {
           val areas =
             try parseAreasPage(body)
             catch {
-              case e: GraphQlErrors =>
-                System.err.println(s"  $country: ${e.getMessage}")
+              case e @ (_: GraphQlErrors | _: JsonProcessingException) =>
+                System.err.println(s"  $country: ${e.getMessage} at offset $offset")
                 return out.result()
             }
           out ++= areas
@@ -242,9 +298,6 @@ query($uuid: ID!) {
     out.result()
   }
 
-  /** Fetch the country list (hard-fail), then every country's areas
-    * (soft-fail per unit) — export.py:160-192. Returns raw area JSON
-    * strings ready for [[JsonSource.fromRecords]]. */
   /** The countries request with the same retry ladder as page fetches
     * (an improvement over export.py:164-168's bare POST: transient
     * 502/timeouts retry instead of hard-failing the whole export; a
@@ -259,6 +312,10 @@ query($uuid: ID!) {
     parseCountries(body) // GraphQlErrors propagates: hard
   }
 
+  /** Fetch the country list (hard-fail), then every country's areas
+    * (soft-fail per unit) — export.py:160-192. Runs on the driver, one
+    * page at a time. Returns raw area JSON strings ready for
+    * [[JsonSource.fromRecords]]. */
   def fetchAllAreas(transport: FetchClient.Transport, apiUrl: String,
       pageSize: Int = AreasPageSize,
       policy: FetchClient.RetryPolicy = FetchClient.RetryPolicy()): Seq[String] = {
@@ -273,8 +330,10 @@ query($uuid: ID!) {
     * parallel — the shape for a backend that tolerates cluster-wide
     * concurrent readers. `mkTransport` is a serializable FACTORY (e.g.
     * `() => FetchClient.httpTransport(120000)`): the HTTP client itself is
-    * built once per partition on the executor, never shipped. Per-country
-    * soft-failure semantics are identical to the driver-side path. */
+    * built once per partition on the executor, never shipped. Pages are
+    * fetched and split inside the tasks; only the country list is fetched
+    * on the driver. Per-country soft-failure semantics are identical to
+    * the driver-side path. */
   def fetchAllAreasDistributed(spark: org.apache.spark.sql.SparkSession,
       mkTransport: () => FetchClient.Transport, apiUrl: String,
       pageSize: Int = AreasPageSize,

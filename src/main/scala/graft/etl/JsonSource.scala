@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** JSON ingestion (SURVEY.md §2.1 S3). The reference hands records to its
@@ -13,6 +13,9 @@ import org.apache.spark.sql.types.StructType
   *    so a 100 TB input parallelizes; a multiLine array file does not).
   *  - [[fromRecords]]: in-memory record strings (e.g. straight from the
   *    fetch client) — no temp-file handoff at all.
+  *
+  * The readers plan on the driver; reading, UTF-8 encoding and JSON
+  * parsing all run in executor tasks.
   */
 object JsonSource {
 
@@ -28,12 +31,17 @@ object JsonSource {
     schema.fold(r)(r.schema).json(path)
   }
 
-  /** Parse records already in memory (driver-side fetch path): distributes
-    * the strings, then parses as JSON on executors. */
+  /** Parse records already in memory (the driver-side fetch path). The
+    * driver only slices the strings into one task per record, up to the
+    * default parallelism (the slice count a local relation scan would
+    * use); encoding them as rows and parsing the JSON run in the tasks.
+    * A malformed record reads as a row of NULLs (PERMISSIVE). */
   def fromRecords(spark: SparkSession, records: Seq[String],
       schema: StructType = ClimbSchema.climb): DataFrame = {
-    import spark.implicits._
-    spark.read.schema(schema).json(records.toDS())
+    val sc = spark.sparkContext
+    val slices = math.min(math.max(records.size, 1), sc.defaultParallelism)
+    spark.read.schema(schema).json(
+      spark.createDataset(sc.parallelize(records, slices))(Encoders.STRING))
   }
 
   /** Register as the `climbs` view the user SQL runs over. */

@@ -154,13 +154,26 @@ class EtlSpec extends SparkSpec {
   }
 
   test("fetch pagination stops on short page; retry ladder retries 502 then succeeds") {
-    var calls = 0
-    val got = FetchClient.paginate[Int](pageSize = 500) { (offset, limit) =>
-      calls += 1
-      val remaining = 1200 - offset
-      (0 until math.min(limit, math.max(0, remaining))).map(offset + _)
+    // one country with 1,200 areas: pages of 500, 500 and a short 200
+    val mapper = new ObjectMapper()
+    var pageRequests = 0
+    val areas1200: FetchClient.Transport = (_, body) => {
+      val vars = mapper.readTree(body).path("variables")
+      if (!vars.has("offset"))
+        (200, """{"data": {"countries": [{"areaName": "X"}]}}""")
+      else {
+        pageRequests += 1
+        val offset = vars.get("offset").asInt()
+        (200, (offset until math.min(offset + vars.get("limit").asInt(), 1200))
+          .map(i => s"""{"uuid": "a$i"}""")
+          .mkString("""{"data": {"areas": [""", ",", "]}}"))
+      }
     }
-    assert(got.size === 1200 && calls === 3)
+    val got = GraphQlApi.fetchAllAreas(areas1200, "http://x",
+      policy = FetchClient.RetryPolicy(backoffMs = 1))
+    assert(got.map(mapper.readTree(_).get("uuid").asText()) ===
+      (0 until 1200).map(i => s"a$i"))
+    assert(pageRequests === 3)
 
     var attempts = 0
     val transport: FetchClient.Transport = (_, _) => {
@@ -184,5 +197,25 @@ class EtlSpec extends SparkSpec {
       case u => Seq(u)
     }
     assert(out === Seq("ok1", "ok2"))
+  }
+
+  test("fromRecords: one slice per record up to the default parallelism; " +
+      "rows equal the local-relation ingest, a malformed record included") {
+    import spark.implicits._
+    val parallelism = spark.sparkContext.defaultParallelism
+    for (n <- Seq(0, 1, 3, 10000)) {
+      val records = (0 until n).map { i =>
+        if (n > 1 && i == n / 2) """{"uuid": "broken", """ // PERMISSIVE: NULL row
+        else GraphQlExportSpec.climbJson(s"c$i", Some(Seq("USA", s"s$i")),
+          Some(i.toDouble))
+      }
+      val df = JsonSource.fromRecords(spark, records)
+      assert(df.rdd.getNumPartitions === math.min(math.max(n, 1), parallelism))
+      val rows = df.collect().toSeq
+      assert(rows === spark.read.schema(ClimbSchema.climb).json(records.toDS())
+        .collect().toSeq)
+      assert(rows.size === n)
+      assert(rows.count(_.getAs[String]("uuid") == null) === (if (n > 1) 1 else 0))
+    }
   }
 }

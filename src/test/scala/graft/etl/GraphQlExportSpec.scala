@@ -1,7 +1,13 @@
 package graft.etl
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.core.json.JsonWriteFeature
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory}
 import org.apache.spark.sql.functions.col
+import org.scalacheck.Gen
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 
@@ -65,6 +71,26 @@ object GraphQlExportSpec {
       }
     }
   }
+
+  /** Fake transport for the partial-country test: one country, Cut,
+    * whose first page of 2 areas is whole and whose second is a 200 with
+    * a body cut off halfway (a dropped connection behind a 200). */
+  def mkTruncatingTransport: () => FetchClient.Transport = () => {
+    val mapper = new ObjectMapper()
+    (_, body) => {
+      val vars = mapper.readTree(body).path("variables")
+      if (!vars.has("offset"))
+        (200, """{"data": {"countries": [{"areaName": "Cut"}]}}""")
+      else {
+        val page = s"""{"data": {"areas": [${
+          areaJson("cut-1", Seq("Cut"), None, Seq.empty)},${
+          areaJson("cut-2", Seq("Cut"), None, Seq.empty)}]}}"""
+        if (vars.get("offset").asInt() == 0) (200, page)
+        else (200, page.take(page.length / 2))
+      }
+    }
+  }
+
   /** Attempt log for the retry-isolation test: country → POST attempts
     * observed across all partitions. Executors share the JVM in local
     * mode, so a concurrent map in the companion is visible test-side. */
@@ -114,7 +140,7 @@ object GraphQlExportSpec {
 }
 
 class GraphQlExportSpec extends SparkSpec {
-  import GraphQlExportSpec.{areaJson, climbJson, mkFakeTransport}
+  import GraphQlExportSpec.{areaJson, climbJson, mkFakeTransport, mkTruncatingTransport}
 
   private val mapper = new ObjectMapper()
 
@@ -150,6 +176,134 @@ class GraphQlExportSpec extends SparkSpec {
     intercept[GraphQlApi.GraphQlErrors] {
       GraphQlApi.parseAreasPage("""{"errors": [{"message": "nope"}]}""")
     }
+  }
+
+  // -- the streaming page splitter against the tree read it replaced -------
+
+  /** The tree read `parseAreasPage` made before it streamed: the oracle. */
+  private def treeAreasPage(body: String): Seq[String] = {
+    val root = mapper.readTree(body)
+    if (root.has("errors")) throw GraphQlApi.GraphQlErrors(root.get("errors").toString)
+    root.path("data").path("areas") match {
+      case a: ArrayNode => a.elements().asScala.map(_.toString).toSeq
+      case _ => Seq.empty
+    }
+  }
+
+  private val nodes = JsonNodeFactory.instance
+
+  // pieces that break offsets counted in bytes or in code points (non-ASCII,
+  // a surrogate pair) and a naive scan for structure (quotes, backslashes,
+  // braces inside strings)
+  private val genText: Gen[String] = Gen.choose(0, 6).flatMap(Gen.listOfN(_,
+    Gen.oneOf("a", "Zz9", "\u00e9", "\u4e2d\u6587", "\uD83E\uDDD7",
+      "\"", "\\", "{", "}", "[", "]", ",", ":", " ", "\n", "\u0001")))
+    .map(_.mkString)
+
+  private val genScalar: Gen[JsonNode] = Gen.oneOf(
+    genText.map(nodes.textNode),
+    Gen.chooseNum(-1000000L, 1000000L).map(nodes.numberNode(_)),
+    Gen.chooseNum(-1e6, 1e6).map(nodes.numberNode(_)),
+    Gen.oneOf(true, false).map(nodes.booleanNode),
+    Gen.const(nodes.nullNode))
+
+  private def genNode(depth: Int): Gen[JsonNode] =
+    if (depth == 0) genScalar
+    else Gen.frequency(2 -> genScalar, 1 -> genArray(depth), 2 -> genObject(depth))
+
+  private def genArray(depth: Int): Gen[JsonNode] =
+    Gen.choose(0, 3).flatMap(Gen.listOfN(_, genNode(depth - 1)))
+      .map { vs => val a = nodes.arrayNode(); vs.foreach(a.add); a }
+
+  private def genObject(depth: Int): Gen[JsonNode] =
+    Gen.choose(0, 4).flatMap(Gen.listOfN(_, Gen.zip(genText, genNode(depth - 1))))
+      .map { kvs =>
+        val o = nodes.objectNode()
+        kvs.foreach { case (k, v) => o.set[JsonNode](k, v) }
+        o
+      }
+
+  /** A page body: compact, pretty-printed or with non-ASCII escaped; root
+    * keys `data` / `errors` / `extensions` in any order, possibly repeated;
+    * `data` null, not an object, or an object whose `areas` is an array
+    * (of objects, scalars and nulls), not an array, missing or repeated;
+    * one body in six cut short. */
+  private val genPage: Gen[String] = for {
+    style <- Gen.choose(0, 2)
+    writer = style match {
+      case 0 => mapper.writer()
+      case 1 => mapper.writerWithDefaultPrettyPrinter()
+      case _ => mapper.writer().`with`(JsonWriteFeature.ESCAPE_NON_ASCII)
+    }
+    render = (n: JsonNode) => writer.writeValueAsString(n)
+    obj = (kvs: Seq[(String, String)]) =>
+      if (style == 1)
+        kvs.map { case (k, v) => s"  ${render(nodes.textNode(k))} : $v" }
+          .mkString("{\n", ",\n", "\n}")
+      else kvs.map { case (k, v) => s"${render(nodes.textNode(k))}:$v" }
+        .mkString("{", ",", "}")
+    element = Gen.frequency(5 -> genObject(3), 1 -> genScalar).map(render)
+    areas = Gen.choose(0, 5).flatMap(Gen.listOfN(_, element))
+      .map(_.mkString("[", if (style == 1) ", " else ",", "]"))
+    dataEntry = Gen.frequency(
+      4 -> areas.map("areas" -> _),
+      1 -> Gen.oneOf(genScalar, genObject(1)).map(n => "areas" -> render(n)),
+      2 -> Gen.zip(genText, genNode(1).map(render)))
+    data = Gen.frequency(
+      6 -> Gen.choose(0, 3).flatMap(Gen.listOfN(_, dataEntry)).map(obj),
+      1 -> Gen.const("null"),
+      1 -> Gen.oneOf(genScalar, genArray(1)).map(render))
+    errors = Gen.frequency(
+      3 -> genText.map(m => render(nodes.arrayNode().add(
+        nodes.objectNode().put("message", m)))),
+      1 -> Gen.const("null"))
+    rootEntry = Gen.frequency(
+      6 -> data.map("data" -> _),
+      1 -> errors.map("errors" -> _),
+      1 -> genNode(1).map(n => "extensions" -> render(n)))
+    entries <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, rootEntry))
+    body = obj(entries)
+    cut <- Gen.frequency(5 -> Gen.const(body.length),
+      1 -> Gen.choose(1, math.max(1, body.length - 1)))
+  } yield body.take(cut)
+
+  test("areas page split: the streaming splitter matches the tree read (property)") {
+    val strict = mapper.reader().`with`(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+    // an element's text must be exactly its value: no surrounding blanks,
+    // nothing after it (the strict reader rejects a trailing comma)
+    def tree(text: String): JsonNode = {
+      assert(text === text.trim)
+      strict.readTree(text)
+    }
+    def outcome(parse: String => Seq[String], body: String): Either[String, Seq[JsonNode]] =
+      (try Right(parse(body)) catch {
+        case e: GraphQlApi.GraphQlErrors => Left(e.getMessage)
+        case _: JsonProcessingException => Left("malformed")
+      }).map(_.map(tree))
+    val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    for (trial <- 1 to 600) {
+      val body = genPage(Gen.Parameters.default, org.scalacheck.rng.Seed(trial.toLong)).get
+      val got = outcome(GraphQlApi.parseAreasPage, body)
+      assert(got === outcome(treeAreasPage, body), s"page: $body")
+      seen(got.fold(e => if (e == "malformed") e else "errors",
+        a => if (a.isEmpty) "empty" else "areas")) += 1
+    }
+    // every kind of outcome was reached
+    assert(seen.keySet === Set("malformed", "errors", "empty", "areas"), seen)
+  }
+
+  test("a page that does not parse ends its country with the pages already " +
+      "fetched, on the driver and the distributed path") {
+    val policy = FetchClient.RetryPolicy(backoffMs = 1)
+    def ids(areas: Seq[String]) =
+      areas.map(a => mapper.readTree(a).get("uuid").asText()).sorted
+    val page1 = Seq("cut-1", "cut-2")
+    assert(ids(GraphQlApi.fetchCountryAreas(mkTruncatingTransport(), "http://x",
+      "Cut", pageSize = 2, policy)) === page1)
+    assert(ids(GraphQlApi.fetchAllAreas(mkTruncatingTransport(), "http://x",
+      pageSize = 2, policy)) === page1)
+    assert(ids(GraphQlApi.fetchAllAreasDistributed(spark, mkTruncatingTransport,
+      "http://x", pageSize = 2, policy, parallelism = 2).collect().toSeq) === page1)
   }
 
   test("single-area fetch: body carries the uuid; envelope unpacks data.area") {
