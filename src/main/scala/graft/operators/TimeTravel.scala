@@ -31,6 +31,10 @@ import org.apache.spark.sql.functions._
   *   - resolving version N = nearest checkpoint at or below N, plus the
   *     deltas up to N — O(checkpointEvery) log reads, each
   *     batch-bounded except the one checkpoint.
+  *   - every record is a [[LogRecord]]: its scaladoc holds the line
+  *     grammar (each line kind, its protocol level, which record shapes
+  *     carry it, and whether it is carried forward or set per commit),
+  *     and its `encode`/`parse` are the format's only codec.
   *
   * Commit mechanics mirror a real table format scaled to essentials:
   *   - writes never mutate: a merge STAGES the rewritten partitions'
@@ -67,6 +71,8 @@ import org.apache.spark.sql.functions._
   * `init` (everything is new) and `vacuum` (orphan discovery IS its
   * job). */
 object TimeTravel {
+
+  import LogRecord.{dec, enc}
 
   /** Write a full checkpoint manifest every this-many versions. Between
     * checkpoints a read replays at most this many batch-bounded deltas;
@@ -152,12 +158,6 @@ object TimeTravel {
   private def checkpointSidecarPath(baseDir: String, v: Int,
       token: String) =
     new Path(logDir(baseDir), s"$v.$token.checkpoint.parquet")
-
-  /** Test seam: `false` writes cadence/floor checkpoints as full TEXT
-    * manifests (the pre-parquet format, still fully readable) — the
-    * equivalence spec stages identical histories under both and pins
-    * identical resolution. */
-  @volatile private[operators] var parquetCheckpoints: Boolean = true
 
   /** Sidecars at or above this size resolve through a Spark scan
     * (distributed columnar parse); smaller ones through one driver
@@ -277,104 +277,56 @@ object TimeTravel {
   }
 
   // ---------------------------------------------------------------------
-  // PROTOCOL / FEATURE GATES — every commit record carries a
-  // `#protocol=<minReader>/<minWriter>` line: the MINIMUM reader and
-  // writer capability a client needs to use the table without silent
-  // corruption (Delta's protocol action, scaled to essentials). The
+  // PROTOCOL / FEATURE GATES — every record declares the MINIMUM reader
+  // and writer capability a client needs to use the table without
+  // silent corruption (Delta's protocol action, scaled to essentials;
+  // the per-line levels are in [[LogRecord]]'s grammar table). The
   // contract is FAIL CLOSED: a reader seeing a requirement above what
   // it supports refuses EVERY read path with one error, even for
-  // features it has never heard of — which is what turns today's
-  // per-feature ad-hoc refusals (DV, column mapping) into the default
-  // every future format addition inherits. Requirements RATCHET: each
-  // record carries max(what its own content needs, the previous
-  // record's requirement), so a table that ever used a feature stays
-  // gated until an explicit downgrade story exists (none today —
-  // matching Delta, where protocol never auto-downgrades). Pre-protocol
-  // records read as 1/1 (the base format every version of this library
-  // reads), which is also what keeps every existing log valid.
-  //
-  // Version ledger (both axes):
-  //   1 = base: files, stats, schema, txn markers, constraints, CDC,
-  //       bloom artifacts (skippable by construction — ignoring them
-  //       costs I/O, never correctness)
-  //   2 = column mapping: `#colmap=`/`#coldrop=` — a reader without it
-  //       would silently NULL-fill renamed columns
-  //   3 = deletion vectors: `#dv=` — a reader without it would
-  //       resurrect deleted rows
+  // features it has never heard of — the default every future format
+  // addition inherits. Requirements RATCHET: each record carries
+  // max(what its own content needs, the previous record's
+  // requirement), so a table that ever used a feature stays gated
+  // until an explicit [[downgradeProtocol]] (protocol never
+  // auto-downgrades, matching Delta).
   // ---------------------------------------------------------------------
   private[operators] val SupportedReader = 3
   private[operators] val SupportedWriter = 3
 
-  private def protocolLine(minReader: Int, minWriter: Int): String =
-    s"#protocol=$minReader/$minWriter"
-
-  /** A record's declared requirement; (1, 1) on pre-protocol records.
-    * An unparsable declaration refuses loudly — a garbled gate must
-    * fail closed, never read as "no gate". */
-  private def protocolFrom(lines: Seq[String]): (Int, Int) =
-    lines.collectFirst { case l if l.startsWith("#protocol=") =>
-      val body = l.stripPrefix("#protocol=")
-      val i = body.indexOf('/')
-      try (body.take(i).trim.toInt, body.drop(i + 1).trim.toInt)
-      catch { case _: Exception => throw new IllegalStateException(
-        s"unparsable protocol requirement '$l' — refusing to read a " +
-          "record whose gate cannot be understood") }
-    }.getOrElse((1, 1))
-
-  /** The requirement a record's OWN content needs (before the ratchet
-    * against its predecessor). */
-  private def protocolNeededBy(colmap: Map[String, String],
-      coldrop: Set[String], dvs: Map[String, String]): (Int, Int) = {
-    val v = if (dvs.nonEmpty) 3
-      else if (colmap.nonEmpty || coldrop.nonEmpty) 2
-      else 1
-    (v, v)
-  }
-
   private def maxProtocol(a: (Int, Int), b: (Int, Int)): (Int, Int) =
     (math.max(a._1, b._1), math.max(a._2, b._2))
 
-  /** The highest requirement any record of `version` declares (delta
-    * and/or checkpoint — a vacuum floor may leave only the manifest),
-    * or None when no record survives. Reads UNGATED: the ratchet and
-    * the writer gate must be computable even when the reader gate
-    * would refuse the content itself. */
-  private def protocolOfRecord(fs: FileSystem, baseDir: String,
-      version: Int): Option[(Int, Int)] = {
-    val ps = Seq(deltaPath(baseDir, version),
-      manifestPath(baseDir, version)).filter(fs.exists(_))
-    if (ps.isEmpty) None
-    else Some(ps.map(p => protocolFrom(readLinesUngated(fs, p)))
-      .reduce(maxProtocol))
-  }
+  /** `rec` with the requirement it must declare: what its own content
+    * needs, ratcheted against the records it follows. */
+  private def ratchet(rec: LogRecord, after: LogRecord*): LogRecord =
+    rec.copy(protocol = Some((rec.needs +: after.map(_.requirement))
+      .reduce(maxProtocol)))
 
-  /** READER GATE — the single choke point: both raw-line readers pass
-    * every log record through here, so a record requiring a newer
-    * reader refuses every read path (resolution, feeds, metadata
-    * lookups, the declarative relation) with this one error. */
-  private def gateReader(p: Path, lines: List[String]): List[String] = {
-    val (r, _) = protocolFrom(lines)
+  /** READER GATE — the single choke point: every parse of a log record
+    * passes through here, so a record requiring a newer reader refuses
+    * every read path (resolution, feeds, metadata lookups, the
+    * declarative relation) with this one error. */
+  private def gateReader(p: Path, rec: LogRecord): LogRecord = {
+    val (r, _) = rec.requirement
     if (r > SupportedReader) throw new IllegalStateException(
       s"$p requires reader protocol version $r, but this library " +
         s"supports up to $SupportedReader — the table uses a newer " +
         "format feature; upgrade the library before reading it")
-    lines
+    rec
   }
 
   /** WRITER GATE — called before a commit record lands: the table's
     * current requirement is its latest record's declaration. A table
     * may be readable but not writable (a write-gated feature), which
     * is exactly the split Delta's reader/writer versions encode. */
-  private def gateWriter(fs: FileSystem, baseDir: String,
-      prevVersion: Int): Unit =
-    if (prevVersion >= 1)
-      protocolOfRecord(fs, baseDir, prevVersion).foreach { case (_, w) =>
-        if (w > SupportedWriter) throw new IllegalStateException(
-          s"$baseDir requires writer protocol version $w, but this " +
-            s"library supports up to $SupportedWriter — the table uses " +
-            "a newer format feature; upgrade the library before " +
-            "writing to it")
-      }
+  private def gateWriter(baseDir: String, prev: LogRecord): Unit = {
+    val (_, w) = prev.requirement
+    if (w > SupportedWriter) throw new IllegalStateException(
+      s"$baseDir requires writer protocol version $w, but this " +
+        s"library supports up to $SupportedWriter — the table uses " +
+        "a newer format feature; upgrade the library before " +
+        "writing to it")
+  }
 
   /** PROTOCOL DOWNGRADE — the explicit story the ratchet points at
     * (Delta's `ALTER TABLE DROP FEATURE`, scaled to essentials): a
@@ -389,24 +341,100 @@ object TimeTravel {
     * the downgrade returns new commits to 1/1 so pre-DV readers can
     * consume the tip again. Refused when the requirement is already
     * minimal (a no-op commit would be noise, not an operation). */
-  def downgradeProtocol(spark: SparkSession, baseDir: String): Int = {
+  def downgradeProtocol(spark: SparkSession, baseDir: String): Int =
+    metadataCommit(spark, baseDir, s"$baseDir has no commits") {
+      (prev, rec) =>
+        val snap = resolveFull(spark, baseDir, prev)
+        val needed = LogRecord(colmap = snap.colmap, coldrop = snap.dropped,
+          dvs = snap.dvs).needs
+        require(rec.requirement != needed,
+          s"$baseDir's protocol requirement ${rec.requirement} is already " +
+            "the minimum its current content needs — nothing to downgrade")
+        carried(rec, "protocol").copy(colmap = snap.colmap,
+          coldrop = snap.dropped, protocol = Some(needed))
+    }
+
+  /** The record at `p`, through the reader gate; `headerOnly` reads
+    * its leading metadata alone ([[LogRecord.header]]: never a text
+    * checkpoint's table-scale body). A manifest reads as a checkpoint
+    * ([[LogRecord.asCheckpoint]]). */
+  private def readRecord(fs: FileSystem, p: Path,
+      headerOnly: Boolean = false): LogRecord = {
+    val in = fs.open(p)
+    try {
+      val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      val rec = gateReader(p,
+        if (headerOnly) LogRecord.header(lines) else LogRecord.parse(lines))
+      if (p.getName.endsWith(".manifest")) rec.asCheckpoint else rec
+    } finally in.close()
+  }
+
+  /** The file that answers for version `v`: its delta (the
+    * authoritative commit record) when one exists, else its manifest
+    * (init's v1, a clone, or a vacuum floor). */
+  private def answering(fs: FileSystem, baseDir: String,
+      v: Int): Option[Path] =
+    Seq(deltaPath(baseDir, v), manifestPath(baseDir, v)).find(fs.exists(_))
+
+  /** Version `v`'s record, read ONCE for every per-version lookup — a
+    * commit parses its predecessor here and carries the metadata
+    * forward. The rules every read of the log keeps:
+    *   - which file answers: the [[answering]] one supplies every field
+    *     (constraints, bloom-index policy, column mapping, txns, op,
+    *     ts, files); when both files exist, the declared protocol is
+    *     the max of the two, and a delta without `#schema=` (a
+    *     pre-schema-line record) falls through to the manifest's
+    *     schema; a version with no record reads as the empty record
+    *     (no metadata, base protocol);
+    *   - gating: every parse passes [[gateReader]];
+    *   - early stop: a read that needs only metadata (that schema
+    *     fall-through, [[commitTimestamp]]) stops at the first
+    *     `#stats=` or file line, never reading a text checkpoint's
+    *     table-scale body;
+    *   - unknown lines: an unknown `#key=` line is skipped — what must
+    *     fail closed does so through the protocol gate;
+    *   - the per-file stats payload stays an opaque string here, with
+    *     its own codec ([[encodeStatsPayload]], [[parseColRange]]). */
+  private[operators] def recordAt(fs: FileSystem, baseDir: String,
+      v: Int): LogRecord =
+    answering(fs, baseDir, v) match {
+      case None => LogRecord()
+      case Some(p) =>
+        val rec = readRecord(fs, p)
+        val m = manifestPath(baseDir, v)
+        if (p == m || !fs.exists(m)) rec
+        else withManifest(rec, readRecord(fs, m, headerOnly = true))
+    }
+
+  /** A version's delta record completed from its manifest header —
+    * the two-file rule of [[recordAt]]. */
+  private def withManifest(delta: LogRecord, manifest: LogRecord): LogRecord =
+    delta.copy(
+      protocol = (delta.protocol ++ manifest.protocol).reduceOption(maxProtocol),
+      schema = delta.schema.orElse(manifest.schema))
+
+  /** The metadata a data-free commit carries forward from the tip's
+    * record: schema and every active policy, under its own `op`. */
+  private def carried(rec: LogRecord, op: String): LogRecord =
+    LogRecord(schema = rec.schema, constraints = rec.constraints,
+      colmap = rec.colmap, coldrop = rec.coldrop, bloomIdx = rec.bloomIdx,
+      op = Some(op))
+
+  /** Land a METADATA-ONLY commit (no files) on the tip: `next` sees the
+    * tip version and its record and returns the new record — it
+    * re-validates on every attempt, since a lost race retries against
+    * the new tip (a concurrent batch must never slip in under a policy
+    * it was not checked against). Returns the committed version. */
+  private def metadataCommit(spark: SparkSession, baseDir: String,
+      noCommits: String)(next: (Int, LogRecord) => LogRecord): Int = {
     val fs = hadoopFs(spark, baseDir)
     var prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits")
+    require(prev >= 1, noCommits)
     while (true) {
-      val snap = resolveFull(spark, baseDir, prev)
-      val needed = protocolNeededBy(snap.colmap, snap.dropped, snap.dvs)
-      val cur = protocolOfRecord(fs, baseDir, prev).getOrElse((1, 1))
-      require(cur != needed,
-        s"$baseDir's protocol requirement $cur is already the minimum " +
-          "its current content needs — nothing to downgrade")
+      val rec = recordAt(fs, baseDir, prev)
+      val out = next(prev, rec)
       try {
-        writeDelta(fs, baseDir, prev + 1, Nil, Nil, None,
-          schemaOfRecord(fs, baseDir, prev), Some("protocol"),
-          constraints = activeConstraints(fs, baseDir, prev),
-          colmap = snap.colmap, coldrop = snap.dropped,
-          bloomIdx = activeBloomIdx(fs, baseDir, prev),
-          protocolOverride = Some(needed))
+        writeDelta(fs, baseDir, prev + 1, out, rec)
         commitStats.put(baseDir, CommitStats(prev + 1, Set.empty, 0, 0,
           checkpointed = false))
         return prev + 1
@@ -417,98 +445,22 @@ object TimeTravel {
     -1 // unreachable
   }
 
-  private def readLinesUngated(fs: FileSystem, p: Path): List[String] = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
-  /** Log-record lines, metadata (`#`-prefixed, e.g. the txn marker)
-    * excluded — resolution sees only file paths. */
-  private def readLogLines(fs: FileSystem, p: Path): List[String] =
-    gateReader(p, readLinesUngated(fs, p)).filterNot(_.startsWith("#"))
-
-  private def readRawLines(fs: FileSystem, p: Path): List[String] =
-    gateReader(p, readLinesUngated(fs, p))
-
-  /** The single place that knows the delta-line grammar: `+path` adds,
-    * `-path` removes, `#` metadata (ignored here). Every reader of a
-    * commit record's file lines goes through this. */
-  private def addsRemovesFrom(lines: Seq[String])
-      : (Seq[String], Seq[String]) =
-    (lines.collect { case l if l.startsWith("+") => l.tail },
-      lines.collect { case l if l.startsWith("-") => l.tail })
-
-  /** The (adds, removes) of version `v`'s commit record. */
-  private def readDelta(fs: FileSystem, baseDir: String,
-      v: Int): (Seq[String], Seq[String]) =
-    addsRemovesFrom(readLogLines(fs, deltaPath(baseDir, v)))
-
-  /** Transactional batch identity, the Delta `txn` action scaled to
-    * essentials: a commit may carry `#txn=<urlenc streamId>:<batchId>`
-    * INSIDE its record — atomic with the commit itself, which is the
-    * whole point (a side file written after the commit reopens the
-    * crash window it exists to close). An at-least-once writer (a
-    * streaming foreachBatch sink re-delivering a batch after a
-    * crash-restart) asks [[lastCommittedTxn]] whether the batch already
-    * landed and skips it — exactly-once for NON-idempotent commits like
-    * the blind append (the merge sinks are last-write-wins idempotent
-    * and don't need it). */
-  private def txnLine(txn: (String, Long)): String =
-    s"#txn=${java.net.URLEncoder.encode(txn._1, "UTF-8")}:${txn._2}"
-
-  /** The table schema AS OF each commit rides in the log too
-    * (`#schema=<DataType json>` — json is newline-free, so one line),
-    * the Delta mechanism that buys three things at once: reads never
-    * INFER schema (no footer sampling over the file list — at 100 TB,
-    * planning cost), SCHEMA EVOLUTION is well-defined (a commit that
-    * adds columns records the widened schema; older files simply lack
-    * the new columns and the reader fills NULLs), and schema TIME
-    * TRAVEL falls out (readVersion(v) returns exactly the columns v was
-    * committed with — a capability footer-merging cannot give, since it
-    * unions every file it sees). Every commit record and checkpoint
-    * carries the line, so any resolution window contains one. */
-  private def schemaLine(schema: org.apache.spark.sql.types.StructType): String =
-    s"#schema=${schema.json}"
-
   // ---------------------------------------------------------------------
   // CHECK constraints — table-level row invariants (Delta's ALTER TABLE
-  // ADD CONSTRAINT ... CHECK). The active set rides in EVERY commit
-  // record as `#constraint=<enc name>|<enc sqlExpr>` lines (the same
-  // mechanism as `#schema=`), so reading any single record yields the
-  // policy — no log walk on the commit path. Enforcement is SQL-standard
-  // CHECK semantics: a row violates when the expression is FALSE; NULL
-  // (unknown) passes, as in every SQL engine's CHECK. Enforced where
-  // rows ENTER the table (init / append / upsert batches); deletes,
-  // compactions and restores only move rows that already passed.
+  // ADD CONSTRAINT ... CHECK). The active set rides in EVERY record, so
+  // reading any single record yields the policy — no log walk on the
+  // commit path. Enforcement is SQL-standard CHECK semantics: a row
+  // violates when the expression is FALSE; NULL (unknown) passes, as in
+  // every SQL engine's CHECK. Enforced where rows ENTER the table
+  // (init / append / upsert batches); deletes, compactions and restores
+  // only move rows that already passed.
   // ---------------------------------------------------------------------
-
-  private def constraintLines(cs: Map[String, String]): Seq[String] =
-    cs.toSeq.sortBy(_._1).map { case (n, e) =>
-      s"#constraint=${enc(n)}|${enc(e)}" }
-
-  private def constraintsFrom(lines: Seq[String]): Map[String, String] =
-    lines.collect { case l if l.startsWith("#constraint=") =>
-      val body = l.stripPrefix("#constraint=")
-      val i = body.indexOf('|')
-      dec(body.take(i)) -> dec(body.drop(i + 1))
-    }.toMap
 
   /** The active constraint set recorded at `version` — one record read
     * (every record carries the full set). Empty on pre-constraint logs. */
   def constraintsAt(spark: SparkSession, baseDir: String,
-      version: Int): Map[String, String] = {
-    val fs = hadoopFs(spark, baseDir)
-    activeConstraints(fs, baseDir, version)
-  }
-
-  private def activeConstraints(fs: FileSystem, baseDir: String,
       version: Int): Map[String, String] =
-    Seq(deltaPath(baseDir, version), manifestPath(baseDir, version))
-      .iterator.filter(fs.exists(_))
-      .map(p => constraintsFrom(readRawLines(fs, p)))
-      .nextOption().getOrElse(Map.empty)
+    recordAt(hadoopFs(spark, baseDir), baseDir, version).constraints
 
   /** Refuse `batch` rows that violate any active constraint — ONE
     * combined pass (violations OR'd, limit-1 probe); only the failure
@@ -531,66 +483,36 @@ object TimeTravel {
     * must already satisfy `sqlExpr` (one scan — Delta validates the
     * same way), then the widened set lands in a data-free commit record
     * every later commit carries forward. On a commit race the loop
-    * re-validates against the NEW tip before retrying — a concurrent
-    * batch must never slip in under a constraint it was not checked
-    * against. Returns the committed version. */
+    * re-validates against the NEW tip before retrying. Returns the
+    * committed version. */
   def addConstraint(spark: SparkSession, baseDir: String, name: String,
       sqlExpr: String): Int = {
     require(name.nonEmpty && sqlExpr.nonEmpty,
       "constraint name and expression are required")
-    val fs = hadoopFs(spark, baseDir)
-    var prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — init the table first")
-    while (true) {
-      val cs = activeConstraints(fs, baseDir, prev)
+    metadataCommit(spark, baseDir,
+        s"$baseDir has no commits — init the table first") { (prev, rec) =>
+      val cs = rec.constraints
       require(!cs.contains(name),
         s"constraint '$name' already exists (${cs(name)}) — drop it first")
       // existing data must satisfy the new invariant, loudly checked
       enforceConstraints(readVersion(spark, baseDir, prev),
         Map(name -> sqlExpr), s"ADD CONSTRAINT $name: existing version " +
           s"$prev")
-      try {
-        val (cm, cd) = activeColmap(fs, baseDir, prev)
-        writeDelta(fs, baseDir, prev + 1, Nil, Nil, None,
-          schemaOfRecord(fs, baseDir, prev), Some("constraint"),
-          constraints = cs + (name -> sqlExpr), colmap = cm, coldrop = cd,
-          bloomIdx = activeBloomIdx(fs, baseDir, prev))
-        commitStats.put(baseDir, CommitStats(prev + 1, Set.empty, 0, 0,
-          checkpointed = false))
-        return prev + 1
-      } catch {
-        case _: CommitConflict => prev = latestVersion(spark, baseDir)
-      }
+      carried(rec, "constraint").copy(constraints = cs + (name -> sqlExpr))
     }
-    -1 // unreachable
   }
 
   /** DROP CONSTRAINT: the shrunken set lands in a metadata-only commit.
     * Dropping an unknown name is a loud error, not a silent no-op. */
   def dropConstraint(spark: SparkSession, baseDir: String,
-      name: String): Int = {
-    val fs = hadoopFs(spark, baseDir)
-    var prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits")
-    while (true) {
-      val cs = activeConstraints(fs, baseDir, prev)
-      require(cs.contains(name), s"no constraint named '$name' " +
-        s"(active: ${cs.keys.toSeq.sorted.mkString(", ")})")
-      try {
-        val (cm, cd) = activeColmap(fs, baseDir, prev)
-        writeDelta(fs, baseDir, prev + 1, Nil, Nil, None,
-          schemaOfRecord(fs, baseDir, prev), Some("constraint"),
-          constraints = cs - name, colmap = cm, coldrop = cd,
-          bloomIdx = activeBloomIdx(fs, baseDir, prev))
-        commitStats.put(baseDir, CommitStats(prev + 1, Set.empty, 0, 0,
-          checkpointed = false))
-        return prev + 1
-      } catch {
-        case _: CommitConflict => prev = latestVersion(spark, baseDir)
-      }
+      name: String): Int =
+    metadataCommit(spark, baseDir, s"$baseDir has no commits") {
+      (_, rec) =>
+        val cs = rec.constraints
+        require(cs.contains(name), s"no constraint named '$name' " +
+          s"(active: ${cs.keys.toSeq.sorted.mkString(", ")})")
+        carried(rec, "constraint").copy(constraints = cs - name)
     }
-    -1 // unreachable
-  }
 
   /** CREATE BLOOMFILTER INDEX (Delta's
     * `CREATE BLOOMFILTER INDEX ... ON TABLE` essentials): a
@@ -611,14 +533,12 @@ object TimeTravel {
       expectedItemsPerFile: Long = 100000L, fpp: Double = 0.01): Int = {
     require(expectedItemsPerFile > 0, "expectedItemsPerFile must be > 0")
     require(fpp > 0.0 && fpp < 1.0, "fpp must be in (0, 1)")
-    val fs = hadoopFs(spark, baseDir)
-    var prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — init the table first")
-    while (true) {
-      val idx = activeBloomIdx(fs, baseDir, prev)
+    metadataCommit(spark, baseDir,
+        s"$baseDir has no commits — init the table first") { (prev, rec) =>
+      val idx = rec.bloomIdx
       require(!idx.contains(column),
         s"'$column' is already bloom-indexed — drop the index first")
-      val schema = schemaOfRecord(fs, baseDir, prev).getOrElse(
+      val schema = rec.schema.getOrElse(
         throw new IllegalArgumentException(
           s"$baseDir's log records no schema — pre-metadata tables " +
             "cannot be bloom-indexed"))
@@ -636,21 +556,9 @@ object TimeTravel {
           !partColsLogical(snap.files, snap.colmap).contains(column),
         s"'$column' is a partition column — directory pruning " +
           "already answers equality on it exactly")
-      try {
-        val (cm, cd) = activeColmap(fs, baseDir, prev)
-        writeDelta(fs, baseDir, prev + 1, Nil, Nil, None,
-          Some(schema), Some("bloomidx"),
-          constraints = activeConstraints(fs, baseDir, prev),
-          colmap = cm, coldrop = cd,
-          bloomIdx = idx + (column -> ((expectedItemsPerFile, fpp))))
-        commitStats.put(baseDir, CommitStats(prev + 1, Set.empty, 0, 0,
-          checkpointed = false))
-        return prev + 1
-      } catch {
-        case _: CommitConflict => prev = latestVersion(spark, baseDir)
-      }
+      carried(rec, "bloomidx").copy(schema = Some(schema),
+        bloomIdx = idx + (column -> ((expectedItemsPerFile, fpp))))
     }
-    -1 // unreachable
   }
 
   /** DROP BLOOMFILTER INDEX: stop building filters for `column`.
@@ -658,78 +566,40 @@ object TimeTravel {
     * filter over an unchanged file never goes stale — until rewrites
     * retire the files. Unknown column is a loud error. */
   def dropBloomIndex(spark: SparkSession, baseDir: String,
-      column: String): Int = {
-    val fs = hadoopFs(spark, baseDir)
-    var prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits")
-    while (true) {
-      val idx = activeBloomIdx(fs, baseDir, prev)
-      require(idx.contains(column), s"no bloom index on '$column' " +
-        s"(indexed: ${idx.keys.toSeq.sorted.mkString(", ")})")
-      try {
-        val (cm, cd) = activeColmap(fs, baseDir, prev)
-        writeDelta(fs, baseDir, prev + 1, Nil, Nil, None,
-          schemaOfRecord(fs, baseDir, prev), Some("bloomidx"),
-          constraints = activeConstraints(fs, baseDir, prev),
-          colmap = cm, coldrop = cd, bloomIdx = idx - column)
-        commitStats.put(baseDir, CommitStats(prev + 1, Set.empty, 0, 0,
-          checkpointed = false))
-        return prev + 1
-      } catch {
-        case _: CommitConflict => prev = latestVersion(spark, baseDir)
-      }
+      column: String): Int =
+    metadataCommit(spark, baseDir, s"$baseDir has no commits") {
+      (_, rec) =>
+        val idx = rec.bloomIdx
+        require(idx.contains(column), s"no bloom index on '$column' " +
+          s"(indexed: ${idx.keys.toSeq.sorted.mkString(", ")})")
+        carried(rec, "bloomidx").copy(bloomIdx = idx - column)
     }
-    -1 // unreachable
-  }
+
+  /** The bloom-index policy as of `version` — public observability. */
+  def bloomIndexAt(spark: SparkSession, baseDir: String,
+      version: Int): Map[String, (Long, Double)] =
+    recordAt(hadoopFs(spark, baseDir), baseDir, version).bloomIdx
 
   // ---------------------------------------------------------------------
   // COLUMN MAPPING — rename/drop as METADATA-ONLY commits (Delta's
   // column mapping). Data files keep their PHYSICAL column names
   // forever; the log maps logical → physical, so a rename rewrites
   // nothing and old files stay readable under every version's own
-  // names (schema time travel included). The active mapping rides in
-  // EVERY commit record as `#colmap=<enc logical>|<enc physical>`
-  // lines (non-identity entries only; absent = identity — which is
-  // also what makes every pre-mapping log valid), plus
-  // `#coldrop=<enc physical>` TOMBSTONES for dropped columns' physical
-  // names: re-adding a column whose name collides with a live or
-  // tombstoned physical name is REFUSED, or the old files' orphaned
-  // values would silently resurface in the new column (Delta solves
-  // the same hazard with UUID physical names; explicit refusal keeps
-  // the log human-readable and the hazard impossible).
+  // names (schema time travel included). Every record carries the
+  // active mapping (non-identity entries only; absent = identity —
+  // which is also what makes every pre-mapping log valid) plus
+  // TOMBSTONES for dropped columns' physical names: re-adding a column
+  // whose name collides with a live or tombstoned physical name is
+  // REFUSED, or the old files' orphaned values would silently
+  // resurface in the new column (Delta solves the same hazard with
+  // UUID physical names; explicit refusal keeps the log human-readable
+  // and the hazard impossible).
   // ---------------------------------------------------------------------
 
-  private def colmapLines(m: Map[String, String],
-      dropped: Set[String]): Seq[String] =
-    m.toSeq.sortBy(_._1).map { case (l, p) =>
-      s"#colmap=${enc(l)}|${enc(p)}" } ++
-      dropped.toSeq.sorted.map(p => s"#coldrop=${enc(p)}")
-
-  private def colmapFrom(lines: Seq[String]): Map[String, String] =
-    lines.collect { case l if l.startsWith("#colmap=") =>
-      val body = l.stripPrefix("#colmap=")
-      val i = body.indexOf('|')
-      dec(body.take(i)) -> dec(body.drop(i + 1))
-    }.toMap
-
-  private def coldropFrom(lines: Seq[String]): Set[String] =
-    lines.collect { case l if l.startsWith("#coldrop=") =>
-      dec(l.stripPrefix("#coldrop=")) }.toSet
-
-  /** The column mapping recorded at `version` — one record read (every
-    * record carries the full mapping). Identity on pre-mapping logs. */
-  private def activeColmap(fs: FileSystem, baseDir: String,
-      version: Int): (Map[String, String], Set[String]) =
-    Seq(deltaPath(baseDir, version), manifestPath(baseDir, version))
-      .iterator.filter(fs.exists(_))
-      .map(readRawLines(fs, _))
-      .map(ls => (colmapFrom(ls), coldropFrom(ls)))
-      .nextOption().getOrElse((Map.empty, Set.empty))
-
-  /** Public view of [[activeColmap]]: logical → physical at `version`. */
+  /** The column mapping logical → physical at `version`. */
   def columnMappingAt(spark: SparkSession, baseDir: String,
       version: Int): Map[String, String] =
-    activeColmap(hadoopFs(spark, baseDir), baseDir, version)._1
+    recordAt(hadoopFs(spark, baseDir), baseDir, version).colmap
 
   /** Physical (file-side) names a new logical column may not take:
     * every mapped physical plus every tombstone. */
@@ -779,16 +649,14 @@ object TimeTravel {
   def addColumns(spark: SparkSession, baseDir: String,
       cols: Seq[org.apache.spark.sql.types.StructField]): Int = {
     require(cols.nonEmpty, "ADD COLUMNS needs at least one column")
-    val fs = hadoopFs(spark, baseDir)
-    var prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — init the table first")
-    cols.foreach(f => require(f.nullable,
-      s"ADD COLUMN ${f.name} NOT NULL is unsatisfiable: every " +
-        "pre-evolution row reads the new column as NULL — add it " +
-        "nullable, backfill, then ADD CONSTRAINT"))
-    require(cols.map(_.name).distinct.size == cols.size,
-      s"duplicate names in ADD COLUMNS (${cols.map(_.name).mkString(", ")})")
-    while (true) {
+    metadataCommit(spark, baseDir,
+        s"$baseDir has no commits — init the table first") { (prev, rec) =>
+      cols.foreach(f => require(f.nullable,
+        s"ADD COLUMN ${f.name} NOT NULL is unsatisfiable: every " +
+          "pre-evolution row reads the new column as NULL — add it " +
+          "nullable, backfill, then ADD CONSTRAINT"))
+      require(cols.map(_.name).distinct.size == cols.size,
+        s"duplicate names in ADD COLUMNS (${cols.map(_.name).mkString(", ")})")
       val snap = resolveFull(spark, baseDir, prev)
       val schema = snap.schema.getOrElse(throw new IllegalArgumentException(
         s"$baseDir records no schema — pre-metadata tables cannot evolve"))
@@ -801,22 +669,11 @@ object TimeTravel {
             "dropped column's file-side name) — old files' orphaned " +
             "values would silently resurface; pick a different name")
       }
-      val newSchema = org.apache.spark.sql.types.StructType(
-        schema.fields ++ cols)
-      try {
-        writeDelta(fs, baseDir, prev + 1, Nil, Nil, None, Some(newSchema),
-          Some("evolve"),
-          constraints = activeConstraints(fs, baseDir, prev),
-          colmap = snap.colmap, coldrop = snap.dropped,
-          bloomIdx = activeBloomIdx(fs, baseDir, prev))
-        commitStats.put(baseDir, CommitStats(prev + 1, Set.empty, 0, 0,
-          checkpointed = false))
-        return prev + 1
-      } catch {
-        case _: CommitConflict => prev = latestVersion(spark, baseDir)
-      }
+      carried(rec, "evolve").copy(
+        schema = Some(org.apache.spark.sql.types.StructType(
+          schema.fields ++ cols)),
+        colmap = snap.colmap, coldrop = snap.dropped)
     }
-    -1 // unreachable
   }
 
   /** RENAME COLUMN as a metadata-only commit: the schema takes the new
@@ -830,10 +687,8 @@ object TimeTravel {
   def renameColumn(spark: SparkSession, baseDir: String,
       from: String, to: String): Int = {
     require(from != to, "rename to the same name is a no-op — refusing")
-    val fs = hadoopFs(spark, baseDir)
-    var prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — init the table first")
-    while (true) {
+    metadataCommit(spark, baseDir,
+        s"$baseDir has no commits — init the table first") { (prev, rec) =>
       val snap = resolveFull(spark, baseDir, prev)
       val schema = snap.schema.getOrElse(throw new IllegalArgumentException(
         s"$baseDir records no schema — pre-metadata tables cannot rename"))
@@ -849,35 +704,24 @@ object TimeTravel {
         snap.colmap.get(from).contains(to),
         s"'$to' is a reserved physical name (a renamed or dropped " +
           "column's file-side name) — pick a different name")
-      val cs = activeConstraints(fs, baseDir, prev)
-      constraintMentions(cs, from).foreach(n =>
+      constraintMentions(rec.constraints, from).foreach(n =>
         throw new IllegalArgumentException(
           s"CHECK constraint '$n' mentions '$from' — drop the " +
             "constraint first, rename, then re-add it under the new name"))
-      val bloomIdx = activeBloomIdx(fs, baseDir, prev)
-      require(!bloomIdx.contains(from),
+      require(!rec.bloomIdx.contains(from),
         s"'$from' is bloom-indexed — drop the index first, rename, " +
           "then re-create it under the new name (the policy and the " +
           "recorded filters key the logical name)")
       val physical = snap.colmap.getOrElse(from, from)
-      val newSchema = org.apache.spark.sql.types.StructType(
-        schema.fields.map(f =>
-          if (f.name == from) f.copy(name = to) else f))
-      val newMap =
-        if (physical == to) snap.colmap - from // renamed BACK: identity
-        else snap.colmap - from + (to -> physical)
-      try {
-        writeDelta(fs, baseDir, prev + 1, Nil, Nil, None, Some(newSchema),
-          Some("colmap"), constraints = cs,
-          colmap = newMap, coldrop = snap.dropped, bloomIdx = bloomIdx)
-        commitStats.put(baseDir, CommitStats(prev + 1, Set.empty, 0, 0,
-          checkpointed = false))
-        return prev + 1
-      } catch {
-        case _: CommitConflict => prev = latestVersion(spark, baseDir)
-      }
+      carried(rec, "colmap").copy(
+        schema = Some(org.apache.spark.sql.types.StructType(
+          schema.fields.map(f =>
+            if (f.name == from) f.copy(name = to) else f))),
+        colmap =
+          if (physical == to) snap.colmap - from // renamed BACK: identity
+          else snap.colmap - from + (to -> physical),
+        coldrop = snap.dropped)
     }
-    -1 // unreachable
   }
 
   /** DROP COLUMN as a metadata-only commit: the schema loses the
@@ -887,85 +731,46 @@ object TimeTravel {
     * for the partition column and while a CHECK constraint mentions
     * the column. */
   def dropColumn(spark: SparkSession, baseDir: String,
-      name: String): Int = {
-    val fs = hadoopFs(spark, baseDir)
-    var prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits")
-    while (true) {
-      val snap = resolveFull(spark, baseDir, prev)
-      val schema = snap.schema.getOrElse(throw new IllegalArgumentException(
-        s"$baseDir records no schema — pre-metadata tables cannot drop"))
-      require(schema.fieldNames.contains(name),
-        s"no column '$name' (columns: ${schema.fieldNames.mkString(", ")})")
-      require(!activePartCols(spark, baseDir, snap, prev)
-          .getOrElse(Nil).contains(name),
-        s"'$name' is a partition column — dropping it is a " +
-          "repartition (a rewrite), not a metadata drop")
-      require(schema.fields.length > 2,
-        "dropping would leave fewer than two columns (partition + one " +
-          "data column) — drop the table instead")
-      val cs = activeConstraints(fs, baseDir, prev)
-      constraintMentions(cs, name).foreach(n =>
-        throw new IllegalArgumentException(
-          s"CHECK constraint '$n' mentions '$name' — drop the " +
-            "constraint first"))
-      val bloomIdx = activeBloomIdx(fs, baseDir, prev)
-      require(!bloomIdx.contains(name),
-        s"'$name' is bloom-indexed — drop the index first")
-      val physical = snap.colmap.getOrElse(name, name)
-      val newSchema = org.apache.spark.sql.types.StructType(
-        schema.fields.filterNot(_.name == name))
-      try {
-        writeDelta(fs, baseDir, prev + 1, Nil, Nil, None, Some(newSchema),
-          Some("colmap"), constraints = cs,
-          colmap = snap.colmap - name, coldrop = snap.dropped + physical,
-          bloomIdx = bloomIdx)
-        commitStats.put(baseDir, CommitStats(prev + 1, Set.empty, 0, 0,
-          checkpointed = false))
-        return prev + 1
-      } catch {
-        case _: CommitConflict => prev = latestVersion(spark, baseDir)
-      }
+      name: String): Int =
+    metadataCommit(spark, baseDir, s"$baseDir has no commits") {
+      (prev, rec) =>
+        val snap = resolveFull(spark, baseDir, prev)
+        val schema = snap.schema.getOrElse(throw new IllegalArgumentException(
+          s"$baseDir records no schema — pre-metadata tables cannot drop"))
+        require(schema.fieldNames.contains(name),
+          s"no column '$name' (columns: ${schema.fieldNames.mkString(", ")})")
+        require(!activePartCols(spark, baseDir, snap, prev)
+            .getOrElse(Nil).contains(name),
+          s"'$name' is a partition column — dropping it is a " +
+            "repartition (a rewrite), not a metadata drop")
+        require(schema.fields.length > 2,
+          "dropping would leave fewer than two columns (partition + one " +
+            "data column) — drop the table instead")
+        constraintMentions(rec.constraints, name).foreach(n =>
+          throw new IllegalArgumentException(
+            s"CHECK constraint '$n' mentions '$name' — drop the " +
+              "constraint first"))
+        require(!rec.bloomIdx.contains(name),
+          s"'$name' is bloom-indexed — drop the index first")
+        val physical = snap.colmap.getOrElse(name, name)
+        carried(rec, "colmap").copy(
+          schema = Some(org.apache.spark.sql.types.StructType(
+            schema.fields.filterNot(_.name == name))),
+          colmap = snap.colmap - name, coldrop = snap.dropped + physical)
     }
-    -1 // unreachable
-  }
-
-  /** Commit-kind and wall-clock metadata lines. The `#op=` kind is what
-    * lets a log CONSUMER reason about a commit without reading its data:
-    * [[readAppendsSince]] delivers `append` adds, skips `compact` adds
-    * (a pure rewrite of already-delivered rows — Delta's
-    * `dataChange=false`), and refuses rewrite kinds. `#ts=` (epoch
-    * millis, the commit's wall-clock) powers [[versionAsOf]] — advisory
-    * like Delta's file-mtime timestamps: version numbers are the
-    * authoritative history, timestamps the human-friendly index. */
-  private def opLine(op: String): String = s"#op=$op"
-  private def tsLine(): String = s"#ts=${System.currentTimeMillis()}"
-  /** `#cdc=<token>`: the commit's captured change rows live under
-    * `_change/<token>/` — see [[changeDir]]. */
-  private def cdcLine(token: String): String = s"#cdc=$token"
-  private def cdcFrom(lines: Seq[String]): Option[String] =
-    lines.collectFirst {
-      case l if l.startsWith("#cdc=") => l.stripPrefix("#cdc=") }
-  private def opFrom(lines: Seq[String]): Option[String] =
-    lines.collectFirst {
-      case l if l.startsWith("#op=") => l.stripPrefix("#op=") }
-  private def tsFrom(lines: Seq[String]): Option[Long] =
-    lines.collectFirst {
-      case l if l.startsWith("#ts=") => l.stripPrefix("#ts=").toLong }
 
   // ---------------------------------------------------------------------
   // Per-file column statistics — DATA SKIPPING from the log alone.
   //
   // Every commit records, for each file it ADDS, the file's min/max per
-  // eligible top-level column (`#stats=<path>|<col>=<min>:<max>;...`,
-  // every token URL-encoded). The values come from the parquet FOOTERS
-  // the write already produced — a driver-side footer read per added
-  // file, O(files touched) like the commit's own listing, no data scan
-  // (the Delta `stats` field on `add` actions, scaled to essentials).
-  // Checkpoints carry the stats of every retained file, so skipping
-  // survives vacuum. A file with no recorded bound for a column is
-  // simply never skipped — stats are an I/O optimization with graceful
-  // degradation, never a correctness input.
+  // eligible top-level column (a `#stats=` payload). The values come
+  // from the parquet FOOTERS the write already produced — a driver-side
+  // footer read per added file, O(files touched) like the commit's own
+  // listing, no data scan (the Delta `stats` field on `add` actions,
+  // scaled to essentials). Checkpoints carry the stats of every
+  // retained file, so skipping survives vacuum. A file with no recorded
+  // bound for a column is simply never skipped — stats are an I/O
+  // optimization with graceful degradation, never a correctness input.
   //
   // Bounds ignore all-null row groups (contributing no stats), which is
   // sound exactly because [[readVersionSkipping]] prunes by range
@@ -973,108 +778,6 @@ object TimeTravel {
   // never satisfy `lo <= x <= hi`, so rows a null-only row group holds
   // can never be in the result the caller filters to.
   // ---------------------------------------------------------------------
-
-  private def enc(s: String): String =
-    java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String): String =
-    java.net.URLDecoder.decode(s, "UTF-8")
-
-  private def statsLine(path: String, payload: String): String =
-    s"#stats=${enc(path)}|$payload"
-
-  /** The parquet-body marker of a checkpoint manifest header, when the
-    * file+stats body lives in a token-named sidecar. */
-  private def markerFrom(lines: Seq[String]): Option[String] =
-    lines.collectFirst {
-      case l if l.startsWith("#filesbody=parquet:") =>
-        l.stripPrefix("#filesbody=parquet:")
-    }
-
-  /** `#stats=` lines → path → encoded per-column payload. */
-  private def statsFrom(lines: Seq[String]): Map[String, String] =
-    lines.collect { case l if l.startsWith("#stats=") =>
-      val rest = l.stripPrefix("#stats=")
-      val i = rest.indexOf('|')
-      dec(rest.take(i)) -> rest.drop(i + 1)
-    }.toMap
-
-  private def statsLinesFor(files: Seq[String],
-      stats: Map[String, String]): Seq[String] =
-    files.sorted.flatMap(f => stats.get(f).map(p => statsLine(f, p)))
-
-  /** `#dv=<enc path> <enc token>` binds a data file to the deletion-
-    * vector artifact holding its deleted row positions. In a DELTA a
-    * binding applies to the record's re-ADDED files (a DV commit
-    * removes-and-re-adds each touched path so conflict detection,
-    * feeds, and stats composition all see it as the rewrite it
-    * logically is); a CHECKPOINT lists the bindings of every retained
-    * bound file. Composition mirrors stats exactly:
-    * `dvs -- removes ++ dvsFrom(lines)`. */
-  private def dvLine(path: String, token: String): String =
-    s"#dv=${enc(path)} ${enc(token)}"
-
-  /** `#dv=` lines → path → artifact token. */
-  private def dvsFrom(lines: Seq[String]): Map[String, String] =
-    lines.collect { case l if l.startsWith("#dv=") =>
-      val rest = l.stripPrefix("#dv=")
-      val i = rest.indexOf(' ')
-      dec(rest.take(i)) -> dec(rest.drop(i + 1))
-    }.toMap
-
-  private def dvLinesFor(dvs: Map[String, String]): Seq[String] =
-    dvs.toSeq.sortBy(_._1).map { case (f, t) => dvLine(f, t) }
-
-  /** `#bloom=<enc path> <enc token>` binds a data file to the bloom
-    * artifact holding its per-column filters. Same composition as
-    * stats and dv bindings: `blooms -- removes ++ bloomsFrom(lines)`;
-    * a rewritten file's binding drops with the file, a DV re-add
-    * CARRIES its binding forward (the bytes didn't change, and deletes
-    * only shrink the value set — the filter stays a sound
-    * over-approximation). */
-  private def bloomLine(path: String, token: String): String =
-    s"#bloom=${enc(path)} ${enc(token)}"
-
-  private def bloomsFrom(lines: Seq[String]): Map[String, String] =
-    lines.collect { case l if l.startsWith("#bloom=") =>
-      val rest = l.stripPrefix("#bloom=")
-      val i = rest.indexOf(' ')
-      dec(rest.take(i)) -> dec(rest.drop(i + 1))
-    }.toMap
-
-  private def bloomLinesFor(m: Map[String, String]): Seq[String] =
-    m.toSeq.sortBy(_._1).map { case (f, t) => bloomLine(f, t) }
-
-  /** `#bloomidx=<enc col> <expectedItems> <fpp>` — the table's ACTIVE
-    * bloom-index policy, riding in every commit record like the
-    * constraint set: which columns get a per-file filter built at
-    * commit time, sized how. One record read answers "what do I
-    * build"; files added before the policy simply have no filter and
-    * are never bloom-skipped (Delta's index is forward-only the same
-    * way). */
-  private def bloomIdxLines(p: Map[String, (Long, Double)]): Seq[String] =
-    p.toSeq.sortBy(_._1).map { case (c, (n, fpp)) =>
-      s"#bloomidx=${enc(c)} $n $fpp" }
-
-  private def bloomIdxFrom(lines: Seq[String]): Map[String, (Long, Double)] =
-    lines.collect { case l if l.startsWith("#bloomidx=") =>
-      val parts = l.stripPrefix("#bloomidx=").split(' ')
-      dec(parts(0)) -> ((parts(1).toLong, parts(2).toDouble))
-    }.toMap
-
-  /** The bloom-index policy active AS OF version `v` — one record
-    * read, like [[activeConstraints]]. */
-  private def activeBloomIdx(fs: FileSystem, baseDir: String,
-      v: Int): Map[String, (Long, Double)] = {
-    val p = Seq(deltaPath(baseDir, v), manifestPath(baseDir, v))
-      .find(fs.exists(_))
-    p.map(path => bloomIdxFrom(readRawLines(fs, path)))
-      .getOrElse(Map.empty)
-  }
-
-  /** The bloom-index policy as of `version` — public observability. */
-  def bloomIndexAt(spark: SparkSession, baseDir: String,
-      version: Int): Map[String, (Long, Double)] =
-    activeBloomIdx(hadoopFs(spark, baseDir), baseDir, version)
 
   /** One file's per-column (min, max) as canonical strings — decimal
     * text for every numeric-ish column (dates as epoch days), raw text
@@ -1323,66 +1026,44 @@ object TimeTravel {
 
   /** The committed schema of `version` — resolved in [[resolveAt]]'s
     * walk. None only for pre-schema-line logs (reads fall back to
-    * inference). */
+    * inference). The schema rides in every record, the Delta mechanism
+    * that buys three things at once: reads never INFER schema (no
+    * footer sampling over the file list at plan time), schema
+    * EVOLUTION is well-defined (files written before a widening read
+    * the new columns as NULL), and schema TIME TRAVEL falls out —
+    * which footer-merging cannot give, since it unions every file it
+    * sees. */
   def schemaAt(spark: SparkSession, baseDir: String,
       version: Int): Option[org.apache.spark.sql.types.StructType] =
     resolveAt(spark, baseDir, version)._2
 
   /** The committed schema of `version` at RECORD cost: every modern
-    * commit record carries its own `#schema=`, so this is one record
-    * read; pre-schema-line records fall back to the full [[schemaAt]]
-    * walk. The cheap path for callers that only need the committed
-    * column ORDER (the SQL surface's per-statement lookup) and must
-    * not pay a log resolve per query. */
+    * commit record carries its own `#schema=`, so this is one
+    * [[recordAt]] read; pre-schema-line records fall back to the full
+    * [[schemaAt]] walk. The cheap path for callers that only need the
+    * committed column ORDER (the SQL surface's per-statement lookup)
+    * and must not pay a log resolve per query. */
   private[graft] def schemaOfRecordFast(spark: SparkSession,
       baseDir: String, version: Int)
       : Option[org.apache.spark.sql.types.StructType] =
-    schemaOfRecord(hadoopFs(spark, baseDir), baseDir, version)
+    recordAt(hadoopFs(spark, baseDir), baseDir, version).schema
       .orElse(schemaAt(spark, baseDir, version))
 
-  /** Fast path for the commit-time schema check: every commit record
-    * carries its own `#schema=`, so `version`'s schema is ONE record
-    * read — no log walk. (None only on pre-schema-line logs, where the
-    * check degrades to unchecked, matching their read behavior.) */
-  private def schemaOfRecord(fs: FileSystem, baseDir: String,
-      version: Int): Option[org.apache.spark.sql.types.StructType] =
-    Seq(deltaPath(baseDir, version), manifestPath(baseDir, version))
-      .iterator.filter(fs.exists(_))
-      .flatMap(p => schemaFrom(readRawLines(fs, p)))
-      .nextOption()
-
-  private def parseTxn(l: String): (String, Long) = {
-    val body = l.stripPrefix("#txn=")
-    val i = body.lastIndexOf(':')
-    (java.net.URLDecoder.decode(body.substring(0, i), "UTF-8"),
-      body.substring(i + 1).toLong)
-  }
-
-  /** All txn markers recorded for `v` — from its DELTA when one exists
-    * (the authoritative commit record, batch-bounded), else its
-    * manifest (v1's init record, or a vacuum floor checkpoint carrying
-    * several streams' marks). Never both: cadence checkpoints are
-    * table-scale file lists written with no txns, so reading them here
-    * would cost O(files) lines per 10th version for nothing. */
-  private def txnsIn(fs: FileSystem, baseDir: String,
-      v: Int): Seq[(String, Long)] = {
-    val d = deltaPath(baseDir, v)
-    val p = if (fs.exists(d)) Some(d)
-      else Some(manifestPath(baseDir, v)).filter(fs.exists(_))
-    p.toSeq.flatMap(readRawLines(fs, _)
-      .filter(_.startsWith("#txn=")).map(parseTxn))
-  }
-
-  /** Highest batchId the log records for `streamId`, scanning commit
-    * records newest→oldest and stopping at the first hit (batchIds are
-    * monotone per stream). O(versions) metadata reads in the worst
-    * case, paid once per stream RESTART — never on the commit path. */
+  /** Highest batchId the log records for `streamId` (the Delta `txn`
+    * action: an at-least-once writer asks whether its batch already
+    * landed; the marker rides INSIDE the commit record, since a side
+    * file written after the commit would reopen the crash window it
+    * exists to close), scanning
+    * commit records newest→oldest and stopping at the first hit
+    * (batchIds are monotone per stream). O(versions) metadata reads in
+    * the worst case, paid once per stream RESTART — never on the commit
+    * path. */
   def lastCommittedTxn(spark: SparkSession, baseDir: String,
       streamId: String): Option[Long] = {
     val fs = hadoopFs(spark, baseDir)
     val entries = logEntries(fs, baseDir)
     entries.keys.toSeq.sorted.reverse.iterator.flatMap { v =>
-      txnsIn(fs, baseDir, v).collect {
+      recordAt(fs, baseDir, v).txns.collect {
         case (s, id) if s == streamId => id }.maxOption
     }.nextOption()
   }
@@ -1394,15 +1075,6 @@ object TimeTravel {
   def filesAt(spark: SparkSession, baseDir: String,
       version: Int): Seq[String] =
     resolveAt(spark, baseDir, version)._1
-
-  private def schemaFrom(lines: Seq[String])
-      : Option[org.apache.spark.sql.types.StructType] =
-    lines.collectFirst {
-      case l if l.startsWith("#schema=") =>
-        org.apache.spark.sql.types.DataType
-          .fromJson(l.stripPrefix("#schema="))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-    }
 
   /** A version fully resolved from the log: its file set, committed
     * schema, and per-file data-skipping stats (files with none recorded
@@ -1423,7 +1095,12 @@ object TimeTravel {
 
   /** ONE log walk yields the file set, the committed schema (last
     * `#schema=` seen wins — a later evolution commit overrides the
-    * checkpoint's), and the retained files' stats of `version`. */
+    * checkpoint's), and the retained files' stats of `version`. Stats,
+    * deletion-vector and bloom bindings compose alike: a delta's
+    * removes drop a file's binding, its lines bind its adds (a DV
+    * commit re-adds each touched file with its new binding). The
+    * column mapping comes from the LAST record of the walk — every
+    * record carries the full current mapping. */
   private def resolveFull(spark: SparkSession, baseDir: String,
       version: Int): Snapshot = {
     val fs = hadoopFs(spark, baseDir)
@@ -1434,133 +1111,49 @@ object TimeTravel {
     require(ckpt >= 1,
       s"version $version of $baseDir is not resolvable: no checkpoint " +
         "at or below it (vacuumed away, or never committed)")
-    val ckptLines = readRawLines(fs, manifestPath(baseDir, ckpt))
-    var schema = schemaFrom(ckptLines)
+    val base = readRecord(fs, manifestPath(baseDir, ckpt))
+    var schema = base.schema
     // parquet-body checkpoints keep only metadata in the text manifest;
     // the file+stats body resolves from the token-named sidecar
-    var (files, stats, dvs, blooms) = markerFrom(ckptLines) match {
+    var (files, stats, dvs, blooms) = base.sidecar match {
       case Some(token) =>
         readCheckpointSidecar(spark, fs, baseDir, ckpt, token)
-      case None =>
-        (ckptLines.filterNot(_.startsWith("#")).toSet, statsFrom(ckptLines),
-          dvsFrom(ckptLines), bloomsFrom(ckptLines))
+      case None => (base.files.toSet, base.stats, base.dvs, base.blooms)
     }
-    // the column mapping comes from the LAST record of the walk — every
-    // record carries the full current mapping (identity when absent)
-    var lastLines: Seq[String] = ckptLines
+    var last = base
     ((ckpt + 1) to version).foreach { v =>
       require(entries.get(v).exists(_._2),
         s"version $v of $baseDir has no commit record (vacuumed away, " +
           "or never committed)")
-      val lines = readRawLines(fs, deltaPath(baseDir, v))
-      schemaFrom(lines).foreach(s => schema = Some(s))
-      val (adds, removes) = addsRemovesFrom(lines)
-      files = files -- removes ++ adds
-      stats = stats -- removes ++ statsFrom(lines)
-      dvs = dvs -- removes ++ dvsFrom(lines)
-      blooms = blooms -- removes ++ bloomsFrom(lines)
-      lastLines = lines
+      val rec = readRecord(fs, deltaPath(baseDir, v))
+      rec.schema.foreach(s => schema = Some(s))
+      files = files -- rec.removes ++ rec.adds
+      stats = stats -- rec.removes ++ rec.stats
+      dvs = dvs -- rec.removes ++ rec.dvs
+      blooms = blooms -- rec.removes ++ rec.blooms
+      last = rec
     }
     Snapshot(files.toSeq.sorted, schema,
       stats.filter { case (f, _) => files(f) },
-      colmapFrom(lastLines), coldropFrom(lastLines),
+      last.colmap, last.coldrop,
       dvs.filter { case (f, _) => files(f) },
       blooms.filter { case (f, _) => files(f) })
   }
 
-  /** Full checkpoint for `version`. Exclusive install for commit
-    * records (init's v1); vacuum may re-materialize a floor checkpoint,
-    * which skips the write when one already exists. */
-  /** The requirement a record at `version` must declare: what its own
-    * content needs, ratcheted against any surviving record at the same
-    * version (a checkpoint written next to its delta) and the previous
-    * one — requirements never decrease without an explicit downgrade. */
-  private def ratchetedProtocol(fs: FileSystem, baseDir: String,
-      version: Int, colmap: Map[String, String], coldrop: Set[String],
-      dvs: Map[String, String]): (Int, Int) =
-    (Seq(protocolNeededBy(colmap, coldrop, dvs)) ++
-      protocolOfRecord(fs, baseDir, version) ++
-      protocolOfRecord(fs, baseDir, version - 1)).reduce(maxProtocol)
+  /** `rec` stamped with the current wall-clock unless it carries its
+    * original one (vacuum re-materializing an existing version's
+    * checkpoint: a fresh time would rewrite history under
+    * [[versionAsOf]]). */
+  private def stamped(rec: LogRecord): LogRecord =
+    if (rec.ts.isDefined) rec
+    else rec.copy(ts = Some(System.currentTimeMillis()))
 
-  /** `#partcols=` — the table's partition layout, recorded explicitly
-    * ONLY where the file layout cannot answer it: a record whose
-    * resolved file set is EMPTY (an [[initEmpty]] v1). Everywhere else
-    * the layout derives from any file path, so the line stays off the
-    * hot grammar. Comma-joined encoded logical names; the bare marker
-    * (empty value) declares an unpartitioned table. */
-  private def partColsLine(partCols: Seq[String]): String =
-    s"#partcols=${partCols.map(enc).mkString(",")}"
-
-  private def partColsFrom(lines: Seq[String]): Option[Seq[String]] =
-    lines.collectFirst { case l if l.startsWith("#partcols=") =>
-      splitCols(l.stripPrefix("#partcols=")).map(dec) }
-
-  private def manifestContent(proto: (Int, Int), files: Seq[String],
-      txns: Seq[(String, Long)],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      op: Option[String], ts: Option[Long],
-      stats: Map[String, String],
-      constraints: Map[String, String] = Map.empty,
-      colmap: Map[String, String] = Map.empty,
-      coldrop: Set[String] = Set.empty,
-      dvs: Map[String, String] = Map.empty,
-      blooms: Map[String, String] = Map.empty,
-      bloomIdx: Map[String, (Long, Double)] = Map.empty,
-      partCols: Option[Seq[String]] = None): Array[Byte] =
-    (Seq(protocolLine(proto._1, proto._2)) ++
-      txns.map(txnLine) ++ schema.map(schemaLine).toSeq ++
-      partCols.map(partColsLine).toSeq ++
-      constraintLines(constraints) ++ colmapLines(colmap, coldrop) ++
-      bloomIdxLines(bloomIdx) ++
-      op.map(opLine).toSeq ++ Seq(ts.fold(tsLine())(t => s"#ts=$t")) ++
-      statsLinesFor(files, stats) ++ dvLinesFor(dvs) ++
-      bloomLinesFor(blooms) ++
-      files.sorted).mkString("\n").getBytes("UTF-8")
-
-  /** `ts`: pass the ORIGINAL commit's wall-clock when re-materializing
-    * an existing version's checkpoint (vacuum's floor) — stamping a
-    * fresh time would rewrite history under [[versionAsOf]]. */
+  /** Install `rec` as `version`'s full-text manifest (init's v1),
+    * declaring its own content's requirement. Exclusive. */
   private def writeManifest(fs: FileSystem, baseDir: String, version: Int,
-      files: Seq[String], txns: Seq[(String, Long)] = Nil,
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      op: Option[String] = None, ts: Option[Long] = None,
-      stats: Map[String, String] = Map.empty,
-      constraints: Map[String, String] = Map.empty,
-      colmap: Map[String, String] = Map.empty,
-      coldrop: Set[String] = Set.empty,
-      dvs: Map[String, String] = Map.empty,
-      blooms: Map[String, String] = Map.empty,
-      bloomIdx: Map[String, (Long, Double)] = Map.empty,
-      partCols: Option[Seq[String]] = None): Unit = {
+      rec: LogRecord): Unit =
     installExclusive(fs, manifestPath(baseDir, version),
-      manifestContent(
-        ratchetedProtocol(fs, baseDir, version, colmap, coldrop, dvs),
-        files, txns, schema, op, ts, stats, constraints,
-        colmap, coldrop, dvs, blooms, bloomIdx, partCols))
-  }
-
-  /** Header-only checkpoint manifest: the metadata lines (txns, schema,
-    * constraints, op, ts) plus the file COUNT and the parquet-body
-    * marker — a few hundred bytes however many files the version
-    * retains, where the text body was O(files) driver-built string.
-    * The body order (metadata first) keeps [[commitTimestamp]]'s
-    * header-only read contract intact. */
-  private def checkpointHeaderContent(proto: (Int, Int), token: String,
-      nFiles: Int,
-      txns: Seq[(String, Long)],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      op: Option[String], ts: Option[Long],
-      constraints: Map[String, String],
-      colmap: Map[String, String] = Map.empty,
-      coldrop: Set[String] = Set.empty,
-      bloomIdx: Map[String, (Long, Double)] = Map.empty): Array[Byte] =
-    (Seq(protocolLine(proto._1, proto._2)) ++
-      txns.map(txnLine) ++ schema.map(schemaLine).toSeq ++
-      constraintLines(constraints) ++ colmapLines(colmap, coldrop) ++
-      bloomIdxLines(bloomIdx) ++
-      op.map(opLine).toSeq ++ Seq(ts.fold(tsLine())(t => s"#ts=$t")) ++
-      Seq(s"#nfiles=$nFiles", s"#filesbody=parquet:$token"))
-      .mkString("\n").getBytes("UTF-8")
+      stamped(ratchet(rec)).encode)
 
   /** Write the checkpoint's file+stats body as a parquet sidecar
     * (Delta's `_checkpoint.parquet` idea): one row per retained file,
@@ -1616,8 +1209,8 @@ object TimeTravel {
     * below [[CheckpointSparkScanBytes]] (the commit path resolves a
     * snapshot per commit — metadata-scale logs must not pay a Spark
     * job each time). */
-  private def readCheckpointSidecar(spark: SparkSession, fs: FileSystem,
-      baseDir: String, version: Int, token: String)
+  private[operators] def readCheckpointSidecar(spark: SparkSession,
+      fs: FileSystem, baseDir: String, version: Int, token: String)
       : (Set[String], Map[String, String], Map[String, String],
         Map[String, String]) = {
     val p = checkpointSidecarPath(baseDir, version, token)
@@ -1674,35 +1267,33 @@ object TimeTravel {
     (files.result(), stats.result(), dvs.result(), blooms.result())
   }
 
-  /** Checkpoint write honoring the [[parquetCheckpoints]] format: the
-    * parquet sidecar + header manifest by default, the legacy full-text
-    * manifest under the test seam. Same atomic-install contract either
-    * way (the manifest is what makes the checkpoint visible). */
-  private def writeManifestCheckpoint(spark: SparkSession, fs: FileSystem,
-      baseDir: String, version: Int, files: Seq[String],
-      txns: Seq[(String, Long)] = Nil,
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      op: Option[String] = None, ts: Option[Long] = None,
-      stats: Map[String, String] = Map.empty,
-      constraints: Map[String, String] = Map.empty,
-      colmap: Map[String, String] = Map.empty,
-      coldrop: Set[String] = Set.empty,
-      dvs: Map[String, String] = Map.empty,
-      blooms: Map[String, String] = Map.empty,
-      bloomIdx: Map[String, (Long, Double)] = Map.empty): Unit =
-    if (!parquetCheckpoints)
-      writeManifest(fs, baseDir, version, files, txns, schema, op, ts,
-        stats, constraints, colmap, coldrop, dvs, blooms, bloomIdx)
-    else {
-      val token = newToken()
-      writeCheckpointSidecar(fs, baseDir, version, token, files, stats,
-        dvs, blooms)
-      installExclusive(fs, manifestPath(baseDir, version),
-        checkpointHeaderContent(
-          ratchetedProtocol(fs, baseDir, version, colmap, coldrop, dvs),
-          token, files.size, txns, schema, op, ts,
-          constraints, colmap, coldrop, bloomIdx))
-    }
+  /** Move `rec`'s file-level body (files, stats, DV and bloom bindings)
+    * into a new token-named parquet sidecar and return the HEADER that
+    * references it: the metadata lines plus the file count and the
+    * sidecar token — a few hundred bytes however many files the
+    * version retains. Metadata precedes the body marker, so
+    * [[commitTimestamp]]'s header-only read holds. */
+  private def checkpointHeader(fs: FileSystem, baseDir: String,
+      version: Int, rec: LogRecord): LogRecord = {
+    val token = newToken()
+    writeCheckpointSidecar(fs, baseDir, version, token, rec.files,
+      rec.stats, rec.dvs, rec.blooms)
+    rec.copy(files = Nil, stats = Map.empty, dvs = Map.empty,
+      blooms = Map.empty, nfiles = Some(rec.files.size),
+      sidecar = Some(token))
+  }
+
+  /** Install `rec` as `version`'s checkpoint — a parquet sidecar plus
+    * its header manifest — declaring its requirement ratcheted against
+    * the records it follows (`after`). The manifest's exclusive install
+    * is what makes the checkpoint visible. Cadence checkpoints, vacuum
+    * floors and clones all land here; the full-text body is read, never
+    * written, outside init's v1. */
+  private def writeManifestCheckpoint(fs: FileSystem, baseDir: String,
+      version: Int, rec: LogRecord, after: LogRecord*): Unit =
+    installExclusive(fs, manifestPath(baseDir, version),
+      checkpointHeader(fs, baseDir, version,
+        stamped(ratchet(rec, after: _*))).encode)
 
   /** The losing writer of a commit race — version `version` was
     * committed by someone else between our snapshot read and our
@@ -1712,48 +1303,24 @@ object TimeTravel {
   private final class CommitConflict(val version: Int)
     extends Exception(s"version $version was committed concurrently")
 
-  /** Commit record for `version` — optional txn marker, then adds and
-    * removes, each sorted. Exclusive create: committing an
-    * already-committed version throws [[CommitConflict]] (the losing
-    * writer of a race gets this, and may rebase). */
-  private def writeDelta(fs: FileSystem, baseDir: String, version: Int,
-      adds: Seq[String], removes: Seq[String],
-      txn: Option[(String, Long)] = None,
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      op: Option[String] = None,
-      stats: Map[String, String] = Map.empty,
-      cdc: Option[String] = None,
-      constraints: Map[String, String] = Map.empty,
-      colmap: Map[String, String] = Map.empty,
-      coldrop: Set[String] = Set.empty,
-      dvs: Map[String, String] = Map.empty,
-      blooms: Map[String, String] = Map.empty,
-      bloomIdx: Map[String, (Long, Double)] = Map.empty,
-      protocolOverride: Option[(Int, Int)] = None): Unit = {
-    // the table's current requirement gates the WRITE, and the new
-    // record carries the ratcheted requirement forward —
-    // protocolOverride ([[downgradeProtocol]]) replaces the ratchet
-    // but may never understate what the record's own content needs
-    gateWriter(fs, baseDir, version - 1)
-    val needed = protocolNeededBy(colmap, coldrop, dvs)
-    protocolOverride.foreach(p => require(
-      maxProtocol(p, needed) == p,
+  /** Commit record `rec` for `version`, following `prev` — the record
+    * of `version - 1` the commit read. The table's current requirement
+    * (`prev`'s) gates the WRITE, and the new record declares the
+    * ratchet of `prev`'s requirement and its own content's; a `rec`
+    * arriving with its protocol set carries an explicit override
+    * ([[downgradeProtocol]]), which may never understate what its own
+    * content needs. Exclusive create: committing an already-committed
+    * version throws [[CommitConflict]] (the losing writer of a race
+    * gets this, and may rebase). Returns the record as written. */
+  private[operators] def writeDelta(fs: FileSystem, baseDir: String,
+      version: Int, rec: LogRecord, prev: LogRecord): LogRecord = {
+    gateWriter(baseDir, prev)
+    rec.protocol.foreach(p => require(maxProtocol(p, rec.needs) == p,
       s"protocol override $p understates the record's own content " +
-        s"(needs $needed)"))
-    val proto = protocolOverride.getOrElse(
-      (protocolOfRecord(fs, baseDir, version - 1) ++
-        Seq(needed)).reduce(maxProtocol))
-    val bytes =
-      (Seq(protocolLine(proto._1, proto._2)) ++
-        txn.map(txnLine).toSeq ++ schema.map(schemaLine).toSeq ++
-        constraintLines(constraints) ++ colmapLines(colmap, coldrop) ++
-        bloomIdxLines(bloomIdx) ++
-        op.map(opLine).toSeq ++ cdc.map(cdcLine).toSeq ++ Seq(tsLine()) ++
-        statsLinesFor(adds, stats) ++ dvLinesFor(dvs) ++
-        bloomLinesFor(blooms) ++
-        adds.sorted.map("+" + _) ++ removes.sorted.map("-" + _))
-        .mkString("\n").getBytes("UTF-8")
-    try installExclusive(fs, deltaPath(baseDir, version), bytes)
+        s"(needs ${rec.needs})"))
+    val landed = stamped(
+      if (rec.protocol.isDefined) rec else ratchet(rec, prev))
+    try installExclusive(fs, deltaPath(baseDir, version), landed.encode)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new CommitConflict(version)
@@ -1762,6 +1329,7 @@ object TimeTravel {
           throw new CommitConflict(version)
         else throw e
     }
+    landed
   }
 
   /** ATOMIC all-or-nothing exclusive install — delegated to the
@@ -1865,16 +1433,6 @@ object TimeTravel {
     } finally fs.delete(staging, true)
   }
 
-  /** Partition dirs a committed version's record touched (adds and
-    * removes both) — the unit of rewrite conflict. "" = the
-    * unpartitioned root, where every rewrite conflicts with every
-    * other (no partition isolation to exploit). */
-  private def deltaTouchedDirs(fs: FileSystem, baseDir: String,
-      v: Int): Set[String] = {
-    val (adds, removes) = readDelta(fs, baseDir, v)
-    (adds ++ removes).map(dirOf).toSet
-  }
-
   /** Attempt the commit at `prev + 1`, REBASING past concurrent
     * winners — the optimistic-concurrency loop every log-structured
     * format runs. A conflict means someone committed our target
@@ -1887,7 +1445,9 @@ object TimeTravel {
     *     dirs (they cannot invalidate what we read or remove); an
     *     intervening commit in our dirs means our base was stale —
     *     surface `ConcurrentModificationException`, the caller re-runs
-    *     against the new tip. */
+    *     against the new tip.
+    * `prevRec`: `prev`'s [[recordAt]] record — the metadata this
+    * commit carries forward. */
   private[operators] def commitWithRebase(spark: SparkSession, fs: FileSystem,
       baseDir: String, prev: Int, dirs: Set[String],
       adds: Seq[String], removes: Seq[String],
@@ -1898,14 +1458,15 @@ object TimeTravel {
       dvs: Map[String, String] = Map.empty,
       statsOverride: Map[String, String] = Map.empty,
       bloomCarry: Map[String, String] = Map.empty,
-      dvTouched: Set[String] = Set.empty): Int = {
+      dvTouched: Set[String] = Set.empty,
+      prevRec: LogRecord): Int = {
     // the RECORDED schema keeps the table's committed column ORDER
     // (genuinely new columns append): checkSchema admits any batch
     // column order, but recording the batch's spelling verbatim would
     // let one column-list INSERT permute the committed order — and
     // that order is load-bearing (DESCRIBE, SELECT *, positional
     // INSERT binding, the streaming source's ordered-name pin)
-    val schema = schemaOfRecord(fs, baseDir, prev) match {
+    val schema = prevRec.schema match {
       case Some(t) =>
         val byName = batchSchema.fields.map(f => f.name -> f).toMap
         val committed = t.fieldNames.toSet
@@ -1928,20 +1489,19 @@ object TimeTravel {
       statsOverride
     val isRewrite = removes.nonEmpty || op == "upsert" || op == "delete" ||
       op == "compact" || op == "merge" || op == "update"
-    // the active policy the batch was ENFORCED under (one record read);
-    // carried forward in this commit's record, re-checked on rebase
-    val constraints = activeConstraints(fs, baseDir, prev)
-    // the column mapping the staged files were WRITTEN under — carried
-    // forward, and a concurrent rename/drop refuses the rebase (the
-    // staged files' physical names would be stale)
-    val (colmap, coldrop) = activeColmap(fs, baseDir, prev)
+    // the active policy the batch was ENFORCED under, the column mapping
+    // the staged files were WRITTEN under, and the bloom policy — all
+    // carried forward from `prev`'s record, and re-checked on rebase (a
+    // concurrent change to any of them refuses the rebase)
+    val constraints = prevRec.constraints
+    val (colmap, coldrop) = (prevRec.colmap, prevRec.coldrop)
     requireNoPhysicalCollision(schema, colmap, coldrop, op)
     // per-file bloom filters for the GENUINELY new files, when a bloom
     // index is active: one column-pruned scan of the just-staged adds,
     // written to a token-named `_bloom` artifact before the record.
     // bloomCarry re-binds unchanged files (DV re-adds) to their old
     // artifacts — a shrunk value set keeps the filter sound.
-    val bloomIdx = activeBloomIdx(fs, baseDir, prev)
+    val bloomIdx = prevRec.bloomIdx
     val builtBlooms = {
       // genuinely NEW files only: dvTouched (and, redundantly, a
       // statsOverride or bloomCarry entry) marks byte-unchanged
@@ -1956,18 +1516,22 @@ object TimeTravel {
       else buildBloomArtifact(spark, baseDir, fresh, schema, colmap,
         bloomIdx)
     }
-    val bloomBind = bloomCarry ++ builtBlooms
+    val rec = LogRecord(txns = txn.toSeq, schema = Some(schema),
+      constraints = constraints, colmap = colmap, coldrop = coldrop,
+      bloomIdx = bloomIdx, op = Some(op), cdc = cdc, stats = addStats,
+      dvs = dvs, blooms = bloomCarry ++ builtBlooms, adds = adds,
+      removes = removes)
     var base = prev
+    var baseRec = prevRec
     while (true) {
-      try return logCommit(spark, fs, baseDir, base + 1, dirs, adds,
-        removes, addStats, () => resolveFull(spark, baseDir, base),
-        txn, Some(schema), op, cdc, constraints, colmap, coldrop, dvs,
-        bloomBind, bloomIdx)
+      try return logCommit(spark, fs, baseDir, base + 1, dirs, rec,
+        baseRec, () => resolveFull(spark, baseDir, base))
       catch { case c: CommitConflict =>
         val latest = latestVersion(spark, baseDir)
         if (isRewrite)
           ((base + 1) to latest).foreach { v =>
-            val touched = deltaTouchedDirs(fs, baseDir, v)
+            val r = readRecord(fs, deltaPath(baseDir, v))
+            val touched = (r.adds ++ r.removes).map(dirOf).toSet
             if (touched.exists(dirs)) throw new
                 java.util.ConcurrentModificationException(
               s"$op of $baseDir read its base at version $base, but " +
@@ -1986,7 +1550,7 @@ object TimeTravel {
         // lastCommittedTxn and skips.
         txn.foreach { case (streamId, batchId) =>
           ((base + 1) to latest).foreach { v =>
-            txnsIn(fs, baseDir, v).foreach { case (s, id) =>
+            recordAt(fs, baseDir, v).txns.foreach { case (s, id) =>
               if (s == streamId && id >= batchId) throw new
                   java.util.ConcurrentModificationException(
                 s"$op of $baseDir carries txn $streamId:$batchId, but " +
@@ -1995,19 +1559,19 @@ object TimeTravel {
             }
           }
         }
+        val tip = recordAt(fs, baseDir, latest)
         // schema may have evolved under us: re-check against the tip
-        checkSchema(schema, schemaOfRecord(fs, baseDir, latest),
-          evolveSchema, op)
+        checkSchema(schema, tip.schema, evolveSchema, op)
         // a constraint change landed concurrently: this batch was
         // enforced under the OLD policy — rebasing would slip
         // unvalidated rows under the new one. Surface loudly; the
         // caller re-runs (re-enforcing against the new tip).
-        if (activeConstraints(fs, baseDir, latest) != constraints)
+        if (tip.constraints != constraints)
           throw new java.util.ConcurrentModificationException(
             s"$op of $baseDir raced a constraint change (version " +
               s"$latest): the batch was validated under the old " +
               "policy — re-run against the current version")
-        if (activeColmap(fs, baseDir, latest) != ((colmap, coldrop)))
+        if ((tip.colmap, tip.coldrop) != ((colmap, coldrop)))
           throw new java.util.ConcurrentModificationException(
             s"$op of $baseDir raced a column rename/drop (version " +
               s"$latest): the staged files were written under the old " +
@@ -2015,12 +1579,13 @@ object TimeTravel {
         // a bloom-policy change landed concurrently: this commit's
         // filters were built under the OLD policy — rebasing would
         // record stale-policy filters (or none) under the new one
-        if (activeBloomIdx(fs, baseDir, latest) != bloomIdx)
+        if (tip.bloomIdx != bloomIdx)
           throw new java.util.ConcurrentModificationException(
             s"$op of $baseDir raced a bloom-index change (version " +
               s"$latest): the batch's filters were built under the old " +
               "policy — re-run against the current version")
         base = latest
+        baseRec = tip
       }
     }
     -1 // unreachable
@@ -2814,8 +2379,9 @@ object TimeTravel {
     require(files.nonEmpty, "init with an EMPTY DataFrame — an empty v1 " +
       "is not representable on plain parquet and would brick every " +
       "later commit; create the table from its first real batch instead")
-    writeManifest(fs, baseDir, 1, files, txn.toSeq, Some(df.schema),
-      Some("init"), stats = computeAddStats(spark, fs, baseDir, files))
+    writeManifest(fs, baseDir, 1, LogRecord(txns = txn.toSeq,
+      schema = Some(df.schema), op = Some("init"), files = files,
+      stats = computeAddStats(spark, fs, baseDir, files)))
     commitStats.put(baseDir, CommitStats(1, Set.empty, files.size, 0,
       checkpointed = true))
     1
@@ -2838,8 +2404,8 @@ object TimeTravel {
     requirePartCols(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
       partCols)
-    writeManifest(fs, baseDir, 1, Nil, Nil, Some(schema),
-      Some("init"), partCols = Some(partCols))
+    writeManifest(fs, baseDir, 1, LogRecord(schema = Some(schema),
+      partCols = Some(partCols), op = Some("init")))
     commitStats.put(baseDir, CommitStats(1, Set.empty, 0, 0,
       checkpointed = true))
     1
@@ -2860,7 +2426,7 @@ object TimeTravel {
       // in between)
       val fs = hadoopFs(spark, baseDir)
       (version to 1 by -1).iterator
-        .flatMap(v => layoutOfRecord(fs, baseDir, v))
+        .flatMap(v => layoutOf(recordAt(fs, baseDir, v)))
         .nextOption()
     }
 
@@ -2877,20 +2443,12 @@ object TimeTravel {
         "column list is fixed at table creation"))
 
   /** One record's view of the layout: its `#partcols=` declaration, or
-    * any of its own ADD paths. None for metadata-only commits — the
-    * blind-append guard's cheap, one-record heuristic. */
-  private def layoutOfRecord(fs: FileSystem, baseDir: String,
-      v: Int): Option[Seq[String]] =
-    Seq(deltaPath(baseDir, v), manifestPath(baseDir, v))
-      .find(fs.exists(_)).flatMap { p =>
-        val lines = readRawLines(fs, p)
-        partColsFrom(lines)
-          .orElse(addsRemovesFrom(lines)._1.headOption
-            .map(f => partColsPhysical(Seq(f))))
-          .orElse(lines.find(l => !l.startsWith("#") && l.nonEmpty &&
-              !l.startsWith("+") && !l.startsWith("-"))
-            .map(f => partColsPhysical(Seq(f)))) // text-checkpoint body
-      }
+    * any of its own ADD paths, or its text-checkpoint body. None for
+    * metadata-only commits — the blind-append guard's cheap,
+    * one-record heuristic. */
+  private def layoutOf(rec: LogRecord): Option[Seq[String]] =
+    rec.partCols.orElse((rec.adds ++ rec.files).headOption
+      .map(f => partColsPhysical(Seq(f))))
 
   /** Batch-vs-table schema contract: identical column (name, type) sets
     * by default; with `evolve`, the batch may be a SUPERSET (columns
@@ -2956,7 +2514,8 @@ object TimeTravel {
     * = the unpartitioned root). */
   private def commitRewrite(spark: SparkSession, baseDir: String,
       partCols: Seq[String], dirs: Set[String], prev: Int,
-      prevSnap: Snapshot, rewritten: DataFrame, op: String,
+      prevSnap: Snapshot, prevRec: LogRecord, rewritten: DataFrame,
+      op: String,
       evolveSchema: Boolean = false, cdc: Option[String] = None,
       clusterBy: Option[(String, Int)] = None,
       zorderBy: Option[(Seq[String], Int)] = None): Int = {
@@ -2978,43 +2537,35 @@ object TimeTravel {
       "commit would empty the table — an empty version is not " +
         "representable on plain parquet; drop the table instead")
     commitWithRebase(spark, fs, baseDir, prev, dirs, adds, removes,
-      None, rewritten.schema, op, evolveSchema, cdc)
+      None, rewritten.schema, op, evolveSchema, cdc, prevRec = prevRec)
   }
 
-  /** Land the commit record for `version` (delta always; checkpoint on
-    * cadence) and publish [[commitStats]]. `prevSnap` is only forced
-    * when a cadence checkpoint is due. The delta carries its adds'
-    * data-skipping stats; the cadence checkpoint carries the stats of
-    * every retained file. */
+  /** Land commit record `rec` for `version` (delta always; checkpoint on
+    * cadence) and publish [[commitStats]]. `prev` is the record the
+    * commit follows; `prevSnap` is only forced when a cadence
+    * checkpoint is due. The delta carries its adds' data-skipping
+    * stats; the cadence checkpoint carries the stats of every retained
+    * file. */
   private def logCommit(spark: SparkSession, fs: FileSystem,
-      baseDir: String, version: Int, dirs: Set[String],
-      adds: Seq[String], removes: Seq[String],
-      addStats: Map[String, String],
-      prevSnap: () => Snapshot,
-      txn: Option[(String, Long)],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      op: String, cdc: Option[String],
-      constraints: Map[String, String] = Map.empty,
-      colmap: Map[String, String] = Map.empty,
-      coldrop: Set[String] = Set.empty,
-      dvs: Map[String, String] = Map.empty,
-      blooms: Map[String, String] = Map.empty,
-      bloomIdx: Map[String, (Long, Double)] = Map.empty): Int = {
-    writeDelta(fs, baseDir, version, adds, removes, txn, schema, Some(op),
-      addStats, cdc, constraints, colmap, coldrop, dvs, blooms, bloomIdx)
+      baseDir: String, version: Int, dirs: Set[String], rec: LogRecord,
+      prev: LogRecord, prevSnap: () => Snapshot): Int = {
+    val landed = writeDelta(fs, baseDir, version, rec, prev)
     val checkpoint = version % checkpointEvery == 0
     if (checkpoint) {
-      val removed = removes.toSet
+      val removed = rec.removes.toSet
       val s = prevSnap()
-      writeManifestCheckpoint(spark, fs, baseDir, version,
-        s.files.filterNot(removed) ++ adds, Nil, schema, Some(op),
-        stats = s.stats -- removes ++ addStats,
-        constraints = constraints, colmap = colmap, coldrop = coldrop,
-        dvs = s.dvs -- removes ++ dvs,
-        blooms = s.blooms -- removes ++ blooms, bloomIdx = bloomIdx)
+      writeManifestCheckpoint(fs, baseDir, version,
+        LogRecord(schema = rec.schema, constraints = rec.constraints,
+          colmap = rec.colmap, coldrop = rec.coldrop,
+          bloomIdx = rec.bloomIdx, op = rec.op,
+          files = s.files.filterNot(removed) ++ rec.adds,
+          stats = s.stats -- rec.removes ++ rec.stats,
+          dvs = s.dvs -- rec.removes ++ rec.dvs,
+          blooms = s.blooms -- rec.removes ++ rec.blooms),
+        landed, prev)
     }
-    commitStats.put(baseDir, CommitStats(version, dirs, adds.size,
-      removes.size, checkpoint))
+    commitStats.put(baseDir, CommitStats(version, dirs, rec.adds.size,
+      rec.removes.size, checkpoint))
     version
   }
 
@@ -3042,6 +2593,10 @@ object TimeTravel {
     val partCols = splitCols(partCol)
     requirePartCols(rows, partCols)
     val fs = hadoopFs(spark, baseDir)
+    // the predecessor's record, parsed ONCE: the layout guard, schema
+    // check, constraint enforcement, collision check and the commit
+    // itself all read it
+    val prevRec = recordAt(fs, baseDir, prev)
     // cheap layout guard without a full snapshot resolve: walk records
     // newest-first to the FIRST one with a derivable layout (its
     // #partcols declaration or its own add paths). Checking only the
@@ -3051,23 +2606,22 @@ object TimeTravel {
     // directory scheme, the exact corruption this guard exists to
     // refuse. The walk is bounded: it stops at the newest data commit.
     requireLayoutMatch(partCols,
-      (prev to 1 by -1).iterator
-        .flatMap(v => layoutOfRecord(fs, baseDir, v)).nextOption(),
+      (Iterator(prevRec) ++ (prev - 1 to 1 by -1).iterator
+        .map(recordAt(fs, baseDir, _))).flatMap(layoutOf).nextOption(),
       "append")
-    checkSchema(rows.schema, schemaOfRecord(fs, baseDir, prev),
-      evolveSchema, "append")
+    checkSchema(rows.schema, prevRec.schema, evolveSchema, "append")
     val batch = rows.localCheckpoint() // distinct-collect + write: 2 actions
-    enforceConstraints(batch, activeConstraints(fs, baseDir, prev),
-      "append")
-    val (colmap, coldrop) = activeColmap(fs, baseDir, prev)
-    requireNoPhysicalCollision(batch.schema, colmap, coldrop, "append")
+    enforceConstraints(batch, prevRec.constraints, "append")
+    requireNoPhysicalCollision(batch.schema, prevRec.colmap,
+      prevRec.coldrop, "append")
     val affected = affectedTuples(batch, partCols)
     Merge.requireNoNullPartitionTuple(affected, partCols)
     if (affected.isEmpty) return prev
     val dirs = affectedDirs(partCols, affected)
-    val adds = stageWrite(spark, baseDir, batch, partCols, colmap = colmap)
+    val adds = stageWrite(spark, baseDir, batch, partCols,
+      colmap = prevRec.colmap)
     commitWithRebase(spark, fs, baseDir, prev, dirs, adds, Nil,
-      txn, batch.schema, "append", evolveSchema)
+      txn, batch.schema, "append", evolveSchema, prevRec = prevRec)
   }
 
   /** One action's worth of commit-gate metadata: batch row count, the
@@ -3172,28 +2726,28 @@ object TimeTravel {
     val partCols = splitCols(partCol)
     requirePartCols(rows, partCols)
     val fs = hadoopFs(spark, baseDir)
-    checkSchema(rows.schema, schemaOfRecord(fs, baseDir, prev),
-      evolveSchema, "overwrite")
+    val prevSnap = resolveFull(spark, baseDir, prev)
+    val prevRec = recordAt(fs, baseDir, prev)
+    checkSchema(rows.schema, prevRec.schema, evolveSchema, "overwrite")
     val batch = rows.localCheckpoint()
-    enforceConstraints(batch, activeConstraints(fs, baseDir, prev),
-      "overwrite")
-    val (colmap, coldrop) = activeColmap(fs, baseDir, prev)
-    requireNoPhysicalCollision(batch.schema, colmap, coldrop, "overwrite")
+    enforceConstraints(batch, prevRec.constraints, "overwrite")
+    requireNoPhysicalCollision(batch.schema, prevRec.colmap,
+      prevRec.coldrop, "overwrite")
     val affected = affectedTuples(batch, partCols)
     Merge.requireNoNullPartitionTuple(affected, partCols)
     require(affected.nonEmpty,
       "overwrite with an empty batch would empty the table — an empty " +
         "version is not representable on plain parquet; drop the table " +
         "instead")
-    val prevSnap = resolveFull(spark, baseDir, prev)
     requireLayoutMatch(partCols,
       activePartCols(spark, baseDir, prevSnap, prev), "overwrite")
-    val adds = stageWrite(spark, baseDir, batch, partCols, colmap = colmap)
+    val adds = stageWrite(spark, baseDir, batch, partCols,
+      colmap = prevRec.colmap)
     val dirs = affectedDirs(partCols, affected) ++
       prevSnap.files.map(dirOf)
     commitWithRebase(spark, fs, baseDir, prev, dirs, adds,
       removes = prevSnap.files, txn, batch.schema, "overwrite",
-      evolveSchema)
+      evolveSchema, prevRec = prevRec)
   }
 
   /** Per-table telemetry of the last MERGE/DELETE's discovery probe:
@@ -3319,6 +2873,7 @@ object TimeTravel {
     requirePartCols(updates, partCols)
     // resolved ONCE per commit: file set, committed schema, and stats
     val prevSnap = resolveFull(spark, baseDir, prev)
+    val prevRec = recordAt(hadoopFs(spark, baseDir), baseDir, prev)
     requireLayoutMatch(partCols,
       activePartCols(spark, baseDir, prevSnap, prev), "upsert")
     val prevSchema = prevSnap.schema
@@ -3327,8 +2882,7 @@ object TimeTravel {
     // their micro-batch before the emptiness gate) instead of copying
     // every row into a second block set per commit
     val ups = Merge.ensureCheckpointed(updates)
-    enforceConstraints(ups,
-      activeConstraints(hadoopFs(spark, baseDir), baseDir, prev), "upsert")
+    enforceConstraints(ups, prevRec.constraints, "upsert")
     // ONE action serves the broadcast gate, the discovery envelope (the
     // envelope prunes on the LEADING key column) AND the batch's distinct
     // partition tuples: group by the partition columns and reduce the
@@ -3373,7 +2927,7 @@ object TimeTravel {
       current.join(updKeys, keyCols, "left_anti"),
         allowMissingColumns = true)
     commitRewrite(spark, baseDir, partCols,
-      affectedDirs(partCols, affected), prev, prevSnap,
+      affectedDirs(partCols, affected), prev, prevSnap, prevRec,
       merged, "upsert", evolveSchema, cdcToken)
   }
 
@@ -3426,6 +2980,7 @@ object TimeTravel {
         .join(delKeys, keyCols, "left_anti")
       commitRewrite(spark, baseDir, partCols,
         affectedDirs(partCols, affected), prev, prevSnap,
+        recordAt(hadoopFs(spark, baseDir), baseDir, prev),
         survivors, "delete", cdc = cdcToken)
     }
   }
@@ -3511,8 +3066,8 @@ object TimeTravel {
     val keyCols = splitCols(keyCol)
     require(keyCols.nonEmpty, "merge needs at least one key column")
     requirePartCols(source, partCols)
-    val fs = hadoopFs(spark, baseDir)
     val prevSnap = resolveFull(spark, baseDir, prev)
+    val prevRec = recordAt(hadoopFs(spark, baseDir), baseDir, prev)
     requireLayoutMatch(partCols,
       activePartCols(spark, baseDir, prevSnap, prev), "merge")
     checkSchema(source.schema, prevSnap.schema, evolve = false, "merge")
@@ -3754,7 +3309,7 @@ object TimeTravel {
     val isInserted = !isMatched && !isTgtOnly && col(insActCol) >= 0
     enforceConstraints(
       j.filter(isUpdated || isInserted || isBsUpdated).select(outCols: _*),
-      activeConstraints(fs, baseDir, prev), "merge")
+      prevRec.constraints, "merge")
     val cdcToken = if (changeFeed) Some(newToken()) else None
     cdcToken.foreach { tok =>
       writeChanges(spark, baseDir, tok, Seq(
@@ -3775,7 +3330,7 @@ object TimeTravel {
     // commitRewrite's staged write — a checkpoint here would re-buffer
     // every surviving row a second time per merge
     val rewritten = j.filter(keep).select(outCols: _*)
-    commitRewrite(spark, baseDir, partCols, dirs, prev, prevSnap,
+    commitRewrite(spark, baseDir, partCols, dirs, prev, prevSnap, prevRec,
       rewritten, "merge", cdc = cdcToken)
   }
 
@@ -3892,6 +3447,7 @@ object TimeTravel {
     val fs = hadoopFs(spark, baseDir)
     val prevSnap = resolveFull(spark, baseDir, prev)
     if (prevSnap.files.isEmpty) return prev // empty table: no matches
+    val prevRec = recordAt(fs, baseDir, prev)
     // the rewrite's layout IS the table's recorded layout — the
     // partCol parameter is kept for source compatibility only
     val partCols = partColsLogical(prevSnap.files, prevSnap.colmap)
@@ -3928,7 +3484,7 @@ object TimeTravel {
       val u = matched.select(schema.fieldNames.map(c =>
         s.get(c).fold(col(c))(e => e.cast(schema(c).dataType).as(c)))
         .toSeq: _*)
-      enforceConstraints(u, activeConstraints(fs, baseDir, prev), op)
+      enforceConstraints(u, prevRec.constraints, op)
       u
     }
     val token = newToken()
@@ -3976,7 +3532,7 @@ object TimeTravel {
       // re-added files keep their bloom filters: bytes unchanged, and a
       // delete only shrinks the value set — still a sound filter
       bloomCarry = prevSnap.blooms.filter { case (f, _) => tset(f) },
-      dvTouched = tset)
+      dvTouched = tset, prevRec = prevRec)
   }
 
   /** Predicate UPDATE (`UPDATE SET ... WHERE p`) as a new version —
@@ -4004,6 +3560,7 @@ object TimeTravel {
     val fs = hadoopFs(spark, baseDir)
     val prevSnap = resolveFull(spark, baseDir, prev)
     if (prevSnap.files.isEmpty) return prev // empty table: no matches
+    val prevRec = recordAt(fs, baseDir, prev)
     // the rewrite's layout IS the table's recorded layout — the
     // partCol parameter is kept for source compatibility only
     val partCols = partColsLogical(prevSnap.files, prevSnap.colmap)
@@ -4059,7 +3616,7 @@ object TimeTravel {
     // updated rows must still satisfy the active CHECK policy
     set.foreach(_ => enforceConstraints(
       rewrittenMarked.filter(col(hit)).drop(hit),
-      activeConstraints(fs, baseDir, prev), op))
+      prevRec.constraints, op))
     val cdcToken = if (changeFeed) Some(newToken()) else None
     cdcToken.foreach { tok =>
       val images = set match {
@@ -4082,7 +3639,7 @@ object TimeTravel {
         "representable on plain parquet; drop the table instead")
     val dirs = matched.map(dirOf).toSet
     commitWithRebase(spark, fs, baseDir, prev, dirs, adds, matched,
-      None, schema, op, evolveSchema = false, cdcToken)
+      None, schema, op, evolveSchema = false, cdcToken, prevRec = prevRec)
   }
 
   /** OPTIMIZE: version-preserving small-file compaction — the
@@ -4160,7 +3717,8 @@ object TimeTravel {
         rows.repartition(threshold)
       else rows
     commitRewrite(spark, baseDir, partCols, fragmented.keySet, prev,
-      prevSnap, consolidated, "compact", clusterBy = clusterBy,
+      prevSnap, recordAt(hadoopFs(spark, baseDir), baseDir, prev),
+      consolidated, "compact", clusterBy = clusterBy,
       zorderBy = zorderBy)
   }
 
@@ -4218,7 +3776,8 @@ object TimeTravel {
         "parquet; drop the table instead")
     val dirs = doomed.map(dirOf).toSet
     commitWithRebase(spark, fs, baseDir, prev, dirs, adds, doomed,
-      None, staged.schema, "compact", evolveSchema = false)
+      None, staged.schema, "compact", evolveSchema = false,
+      prevRec = recordAt(fs, baseDir, prev))
   }
 
   /** REPARTITION the table: rewrite the CURRENT version's rows under a
@@ -4280,8 +3839,8 @@ object TimeTravel {
     Merge.requireNoNullPartitionTuple(newTuples, newCols)
     val dirs = prevSnap.files.map(dirOf).toSet ++
       affectedDirs(newCols, newTuples)
-    commitRewrite(spark, baseDir, newCols, dirs, prev, prevSnap, rows,
-      "repartition")
+    commitRewrite(spark, baseDir, newCols, dirs, prev, prevSnap,
+      recordAt(hadoopFs(spark, baseDir), baseDir, prev), rows, "repartition")
   }
 
   /** RESTORE: roll the table back to `toVersion` as a NEW commit (the
@@ -4324,6 +3883,7 @@ object TimeTravel {
     val cur = resolveFull(spark, baseDir, prev)
     val curSet = cur.files.toSet
     val targetSet = target.files.toSet
+    val targetRec = recordAt(fs, baseDir, toVersion)
     // a file in BOTH versions whose DV binding differs (a delete-
     // vector commit or its rewind) restores as a remove-and-re-add:
     // the re-add carries the target's binding (or none), exactly the
@@ -4341,11 +3901,13 @@ object TimeTravel {
     val addBlooms = target.blooms.filter { case (f, _) => addSet(f) }
     // constraints and the bloom policy are table POLICY restored with
     // the content, like the schema: the commit carries toVersion's set
-    try logCommit(spark, fs, baseDir, prev + 1, dirs, adds, removes,
-      addStats, () => cur, None, target.schema, "restore", None,
-      activeConstraints(fs, baseDir, toVersion),
-      target.colmap, target.dropped, addDvs, addBlooms,
-      activeBloomIdx(fs, baseDir, toVersion))
+    try logCommit(spark, fs, baseDir, prev + 1, dirs,
+      LogRecord(schema = target.schema,
+        constraints = targetRec.constraints, colmap = target.colmap,
+        coldrop = target.dropped, bloomIdx = targetRec.bloomIdx,
+        op = Some("restore"), stats = addStats, dvs = addDvs,
+        blooms = addBlooms, adds = adds, removes = removes),
+      recordAt(fs, baseDir, prev), () => cur)
     catch {
       case _: CommitConflict =>
         throw new java.util.ConcurrentModificationException(
@@ -4415,9 +3977,14 @@ object TimeTravel {
     val floorSnap = resolveFull(spark, baseDir, keepFrom)
     val (floorFiles, floorSchema) = (floorSnap.files, floorSnap.schema)
     val floor = floorFiles.toSet
-    val laterAdds = ((keepFrom + 1) to latest)
-      .flatMap(v => readDelta(fs, baseDir, v)._1)
-    val kept = floor ++ laterAdds
+    // the records vacuum reasons about, each parsed once: the retained
+    // deltas above the floor and the deltas about to drop
+    val retained = ((keepFrom + 1) to latest)
+      .map(v => readRecord(fs, deltaPath(baseDir, v)))
+    val droppedDeltas = (1 to keepFrom).map(v => v -> deltaPath(baseDir, v))
+      .collect { case (v, d) if fs.exists(d) => v -> readRecord(fs, d) }
+      .toMap
+    val kept = floor ++ retained.flatMap(_.adds)
     // self-contain the floor BEFORE anything is deleted: a crash at any
     // later point leaves every retained version resolvable. The
     // checkpoint carries the floor's SCHEMA (dropping its ancestors
@@ -4426,20 +3993,26 @@ object TimeTravel {
     // commit predates the floor could re-append its crash-window
     // batch — and the floor commit's ORIGINAL kind and wall-clock, so
     // versionAsOf keeps answering pre-vacuum timestamps truthfully.
-    val carried = (1 to keepFrom).flatMap(v => txnsIn(fs, baseDir, v))
-      .groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2).max }
+    val carriedTxns = (1 to keepFrom).flatMap(v =>
+      droppedDeltas.get(v).map(_.txns).getOrElse {
+        val m = manifestPath(baseDir, v)
+        if (fs.exists(m)) readRecord(fs, m, headerOnly = true).txns else Nil
+      }).groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2).max }
       .toSeq.sortBy(_._1)
-    val origLines =
-      Seq(deltaPath(baseDir, keepFrom), manifestPath(baseDir, keepFrom))
-        .find(fs.exists(_)).map(readRawLines(fs, _)).getOrElse(Nil)
+    val orig = droppedDeltas.getOrElse(keepFrom,
+      answering(fs, baseDir, keepFrom).map(readRecord(fs, _))
+        .getOrElse(LogRecord()))
+    val floorRec = LogRecord(txns = carriedTxns, schema = floorSchema,
+      constraints = orig.constraints, colmap = floorSnap.colmap,
+      coldrop = floorSnap.dropped, bloomIdx = orig.bloomIdx, op = orig.op,
+      ts = orig.ts, files = floor.toSeq, stats = floorSnap.stats,
+      dvs = floorSnap.dvs, blooms = floorSnap.blooms)
     val mPath = manifestPath(baseDir, keepFrom)
     if (dryRun) () // a report must not self-contain the floor either
     else if (!fs.exists(mPath))
-      writeManifestCheckpoint(spark, fs, baseDir, keepFrom, floor.toSeq,
-        carried, floorSchema, opFrom(origLines).orElse(Some("floor")),
-        tsFrom(origLines), floorSnap.stats, constraintsFrom(origLines),
-        floorSnap.colmap, floorSnap.dropped, floorSnap.dvs,
-        floorSnap.blooms, bloomIdxFrom(origLines))
+      writeManifestCheckpoint(fs, baseDir, keepFrom,
+        floorRec.copy(op = orig.op.orElse(Some("floor"))),
+        orig, recordAt(fs, baseDir, keepFrom - 1))
     else {
       // the floor may already have a CADENCE checkpoint — written at
       // commit time with no txn marks. The marks living only in the
@@ -4447,43 +4020,21 @@ object TimeTravel {
       // checkpoint (tmp + rename) when any carried mark isn't already
       // covered. Crash-safe: until the rename lands, the floor's delta
       // and ancestors are all still present, so nothing is unresolvable.
-      val existing = readRawLines(fs, mPath)
-        .filter(_.startsWith("#txn=")).map(parseTxn).toMap
-      val covered = carried.forall { case (s, id) =>
+      val existing = readRecord(fs, mPath, headerOnly = true).txns.toMap
+      val covered = carriedTxns.forall { case (s, id) =>
         existing.get(s).exists(_ >= id) }
       if (!covered) {
         val tmp = new Path(logDir(baseDir), s"$keepFrom.manifest.tmp")
         fs.delete(tmp, false)
         // the rewritten floor keeps the ORIGINAL record's ratcheted
-        // requirement (origLines carries it), raised if the floor
-        // snapshot's own content needs more
-        val floorProto = maxProtocol(protocolFrom(origLines),
-          protocolNeededBy(floorSnap.colmap, floorSnap.dropped,
-            floorSnap.dvs))
-        val bytes =
-          if (!parquetCheckpoints)
-            manifestContent(floorProto, floor.toSeq.sorted, carried,
-              floorSchema, opFrom(origLines), tsFrom(origLines),
-              floorSnap.stats, constraintsFrom(origLines),
-              floorSnap.colmap, floorSnap.dropped, floorSnap.dvs,
-              floorSnap.blooms, bloomIdxFrom(origLines))
-          else {
-            // new sidecar first (derived, token-named — the old one
-            // stays referenced until the header rename lands, so a
-            // crash anywhere leaves a resolvable floor); the old
-            // token's sidecar becomes unreferenced residue the sweep
-            // below (or the next vacuum) reclaims
-            val token = newToken()
-            writeCheckpointSidecar(fs, baseDir, keepFrom, token,
-              floor.toSeq.sorted, floorSnap.stats, floorSnap.dvs,
-              floorSnap.blooms)
-            checkpointHeaderContent(floorProto, token, floor.size,
-              carried,
-              floorSchema, opFrom(origLines), tsFrom(origLines),
-              constraintsFrom(origLines),
-              floorSnap.colmap, floorSnap.dropped,
-              bloomIdxFrom(origLines))
-          }
+        // requirement, raised if the floor snapshot's own content needs
+        // more. New sidecar first (derived, token-named — the old one
+        // stays referenced until the header rename lands, so a crash
+        // anywhere leaves a resolvable floor); the old token's sidecar
+        // becomes unreferenced residue the sweep below (or the next
+        // vacuum) reclaims
+        val bytes = checkpointHeader(fs, baseDir, keepFrom,
+          stamped(ratchet(floorRec, orig))).encode
         val out = fs.create(tmp, true)
         try out.write(bytes)
         finally out.close()
@@ -4497,39 +4048,27 @@ object TimeTravel {
     // reclaim unconditionally; files in NO record are possibly a
     // concurrent writer's in-flight stage — age-guarded (doc above)
     val priorRefs: Set[String] = (1 until keepFrom).flatMap { v =>
-      val d = deltaPath(baseDir, v)
-      if (fs.exists(d)) readDelta(fs, baseDir, v)._1
-      else {
+      droppedDeltas.get(v).map(_.adds).getOrElse {
         val m = manifestPath(baseDir, v)
         if (!fs.exists(m)) Nil
         else {
           // a parquet-body checkpoint's file refs live in its sidecar
-          val lines = readRawLines(fs, m)
-          markerFrom(lines) match {
+          val rec = readRecord(fs, m)
+          rec.sidecar match {
             case Some(tok) =>
               readCheckpointSidecar(spark, fs, baseDir, v, tok)._1.toSeq
-            case None => lines.filterNot(_.startsWith("#"))
+            case None => rec.files
           }
         }
       }
     }.toSet
     val (committedDoomed, orphans) = doomed.partition(priorRefs)
-    // CDC tokens of the records being dropped — committed history whose
-    // change rows reclaim unconditionally (collected BEFORE the drop)
-    val droppedCdc = (1 to keepFrom).flatMap { v =>
-      val d = deltaPath(baseDir, v)
-      if (fs.exists(d)) cdcFrom(readRawLines(fs, d)) else None
-    }.toSet
-    // DV and bloom tokens of the records being dropped — collected
-    // BEFORE the drop for the same reason as droppedCdc
-    val droppedDv: Set[String] = (1 to keepFrom).flatMap { v =>
-      val d = deltaPath(baseDir, v)
-      if (fs.exists(d)) dvsFrom(readRawLines(fs, d)).values else Nil
-    }.toSet
-    val droppedBloom: Set[String] = (1 to keepFrom).flatMap { v =>
-      val d = deltaPath(baseDir, v)
-      if (fs.exists(d)) bloomsFrom(readRawLines(fs, d)).values else Nil
-    }.toSet
+    // CDC, DV and bloom tokens of the records being dropped — committed
+    // history whose artifacts reclaim unconditionally (collected BEFORE
+    // the drop)
+    val droppedCdc = droppedDeltas.values.flatMap(_.cdc).toSet
+    val droppedDv = droppedDeltas.values.flatMap(_.dvs.values).toSet
+    val droppedBloom = droppedDeltas.values.flatMap(_.blooms.values).toSet
     val cutoff = System.currentTimeMillis() - math.max(0L, orphanMinAgeMs)
     val oldOrphans = orphans.filter { f =>
       try fs.getFileStatus(new Path(dataDir(baseDir), f))
@@ -4554,58 +4093,28 @@ object TimeTravel {
     // the floor's delta is redundant once its checkpoint exists and its
     // ancestors are gone; dropping it is log hygiene, not a version drop
     fs.delete(deltaPath(baseDir, keepFrom), false)
-    // change-feed rows are addressable ONLY through a retained record's
-    // #cdc token: reclaim every change dir no retained delta references —
-    // dropped versions' rows, the floor's own (windows start above it),
-    // and aborted commits' orphan captures alike. O(retained versions)
-    // metadata reads + one _change listing (O(rewrite commits) entries).
-    val referenced = ((keepFrom + 1) to latest).flatMap(v =>
-      cdcFrom(readRawLines(fs, deltaPath(baseDir, v)))).toSet
-    val cr = changeRoot(baseDir)
-    if (fs.exists(cr))
-      fs.listStatus(cr).foreach { st =>
-        val tok = st.getPath.getName
-        // dropped-record tokens are committed history: reclaim. A token
-        // in NO record may be an in-flight CDC commit's capture (written
-        // before its record) — the same age guard as data orphans,
-        // applied to the dir's NEWEST content (see the vacuum doc).
-        if (!referenced(tok) && (droppedCdc(tok) ||
-            newestMtime(fs, st) <= cutoff))
-          fs.delete(st.getPath, true) }
-    // DV artifacts are addressable through any RETAINED version's
-    // resolution: the floor snapshot's bindings plus every retained
-    // delta's `#dv=` tokens (a binding set below the floor and still
-    // live surfaces in the floor's resolution; one set later rides its
-    // own retained record). Artifact dirs outside that set: committed
-    // history whose every binding was superseded or dropped (tokens in
-    // the dropped records — reclaim now), or a possibly-in-flight
-    // commit's artifact (written before its record — age-guarded, like
-    // every other pre-record landing).
-    val dvReferenced: Set[String] = floorSnap.dvs.values.toSet ++
-      ((keepFrom + 1) to latest).flatMap { v =>
-        val d = deltaPath(baseDir, v)
-        if (fs.exists(d)) dvsFrom(readRawLines(fs, d)).values else Nil
-      }
-    val dvr = dvRoot(baseDir)
-    if (fs.exists(dvr))
-      fs.listStatus(dvr).foreach { st =>
-        val tok = st.getPath.getName
-        if (!dvReferenced(tok) && (droppedDv(tok) ||
-            newestMtime(fs, st) <= cutoff))
-          fs.delete(st.getPath, true) }
-    // bloom artifacts: the same addressability rule as DV artifacts
-    val bloomReferenced: Set[String] = floorSnap.blooms.values.toSet ++
-      ((keepFrom + 1) to latest).flatMap { v =>
-        val d = deltaPath(baseDir, v)
-        if (fs.exists(d)) bloomsFrom(readRawLines(fs, d)).values else Nil
-      }
-    val br = bloomRoot(baseDir)
-    if (fs.exists(br))
-      fs.listStatus(br).foreach { st =>
-        val tok = st.getPath.getName
-        if (!bloomReferenced(tok) && (droppedBloom(tok) ||
-            newestMtime(fs, st) <= cutoff))
-          fs.delete(st.getPath, true) }
+    // Token-addressed artifact dirs are swept alike: a dir no retained
+    // record references is committed history when a dropped record
+    // named it (reclaim now), else possibly an in-flight commit's
+    // artifact, written before its record — age-guarded on the dir's
+    // NEWEST content (see the vacuum doc). Change rows are addressable
+    // only through a retained delta's `#cdc=` token (the floor's own
+    // rows go too: windows start above it). DV and bloom artifacts are
+    // addressable through any retained version's resolution: the floor
+    // snapshot's bindings plus every retained delta's.
+    def sweep(root: Path, referenced: Set[String],
+        droppedTokens: Set[String]): Unit =
+      if (fs.exists(root))
+        fs.listStatus(root).foreach { st =>
+          val tok = st.getPath.getName
+          if (!referenced(tok) && (droppedTokens(tok) ||
+              newestMtime(fs, st) <= cutoff))
+            fs.delete(st.getPath, true) }
+    sweep(changeRoot(baseDir), retained.flatMap(_.cdc).toSet, droppedCdc)
+    sweep(dvRoot(baseDir), floorSnap.dvs.values.toSet ++
+      retained.flatMap(_.dvs.values), droppedDv)
+    sweep(bloomRoot(baseDir), floorSnap.blooms.values.toSet ++
+      retained.flatMap(_.blooms.values), droppedBloom)
     // a crashed writer's STAGING dir (files written, the move never ran)
     // is the same garbage class: a live writer's staging is younger than
     // the age threshold, a dead one's leaks forever without this sweep
@@ -4627,7 +4136,7 @@ object TimeTravel {
         v =>
           val m = manifestPath(baseDir, v)
           if (!fs.exists(m)) None
-          else markerFrom(readRawLines(fs, m))
+          else readRecord(fs, m, headerOnly = true).sidecar
             .map(t => s"$v.$t.checkpoint.parquet")
       }.toSet
       fs.listStatus(ld).foreach { st =>
@@ -4693,20 +4202,13 @@ object TimeTravel {
     val entries = logEntries(fs, baseDir)
     entries.keys.toSeq.sorted.reverse.map { v =>
       val (hasManifest, hasDelta) = entries(v)
-      val lines = readRawLines(fs,
+      val rec = readRecord(fs,
         if (hasDelta) deltaPath(baseDir, v) else manifestPath(baseDir, v))
-      val txns = lines.filter(_.startsWith("#txn="))
-        .map(parseTxn).sortBy(_._1)
+      // a parquet-body checkpoint's header records its file count
       val nAdded =
-        if (hasDelta) lines.count(_.startsWith("+"))
-        else lines.collectFirst {
-          // parquet-body checkpoint: the header records the file count
-          case l if l.startsWith("#nfiles=") =>
-            l.stripPrefix("#nfiles=").toInt
-        }.getOrElse(lines.count(l => !l.startsWith("#")))
-      val nRemoved = if (hasDelta) lines.count(_.startsWith("-")) else 0
-      CommitInfo(v, nAdded, nRemoved, txns, hasManifest,
-        opFrom(lines), tsFrom(lines))
+        if (hasDelta) rec.adds.size else rec.nfiles.getOrElse(rec.files.size)
+      CommitInfo(v, nAdded, rec.removes.size, rec.txns.sortBy(_._1),
+        hasManifest, rec.op, rec.ts)
     }
   }
 
@@ -4730,6 +4232,7 @@ object TimeTravel {
     require(latest >= 1, s"$baseDir has no commits")
     val fs = hadoopFs(spark, baseDir)
     val snap = resolveFull(spark, baseDir, latest)
+    val rec = recordAt(fs, baseDir, latest)
     val sizeBytes = snap.files.groupBy(dirOf)
       .iterator.map { case (dir, fls) =>
         val wanted = fls.map(baseName).toSet
@@ -4741,8 +4244,7 @@ object TimeTravel {
       }.sum
     TableDetail(latest, snap.files.size, sizeBytes,
       partColsLogical(snap.files, snap.colmap).mkString(","), snap.schema,
-      activeConstraints(fs, baseDir, latest),
-      activeBloomIdx(fs, baseDir, latest), snap.colmap,
+      rec.constraints, rec.bloomIdx, snap.colmap,
       snap.dvs.size, snap.blooms.size)
   }
 
@@ -4775,6 +4277,7 @@ object TimeTravel {
       s"$dstDir already has commits — clone into a fresh dir")
     val snap = resolveFull(spark, baseDir, v)
     require(snap.files.nonEmpty, s"version $v of $baseDir is empty")
+    val rec = recordAt(fs, baseDir, v)
     // data files: link (or copy) each under the same relative path
     val srcData = fs.makeQualified(dataDir(baseDir)).toString
     val dstData = dstFs.makeQualified(dataDir(dstDir)).toString
@@ -4794,13 +4297,11 @@ object TimeTravel {
           .toSeq
         linkOrCopyAll(spark, fs, arts)
     }
-    writeManifestCheckpoint(spark, dstFs, dstDir, 1, snap.files,
-      txns = Nil, schema = snap.schema, op = Some("clone"),
-      stats = snap.stats,
-      constraints = activeConstraints(fs, baseDir, v),
+    writeManifestCheckpoint(dstFs, dstDir, 1, LogRecord(
+      schema = snap.schema, constraints = rec.constraints,
       colmap = snap.colmap, coldrop = snap.dropped,
-      dvs = snap.dvs, blooms = snap.blooms,
-      bloomIdx = activeBloomIdx(fs, baseDir, v))
+      bloomIdx = rec.bloomIdx, op = Some("clone"), files = snap.files,
+      stats = snap.stats, dvs = snap.dvs, blooms = snap.blooms))
     commitStats.put(dstDir, CommitStats(1, Set.empty, snap.files.size, 0,
       checkpointed = true))
     1
@@ -4868,19 +4369,10 @@ object TimeTravel {
     * table-scale floor checkpoint costs a few hundred bytes here
     * (metadata lines are written before stats and files by
     * construction). */
-  private def commitTimestamp(fs: FileSystem, baseDir: String,
-      v: Int): Option[Long] = {
-    val p = Seq(deltaPath(baseDir, v), manifestPath(baseDir, v))
-      .find(fs.exists(_))
-    p.flatMap { path =>
-      val in = fs.open(path)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .takeWhile(l => l.startsWith("#") && !l.startsWith("#stats="))
-        .collectFirst {
-          case l if l.startsWith("#ts=") => l.stripPrefix("#ts=").toLong }
-      finally in.close()
-    }
-  }
+  private[operators] def commitTimestamp(fs: FileSystem, baseDir: String,
+      v: Int): Option[Long] =
+    answering(fs, baseDir, v)
+      .flatMap(readRecord(fs, _, headerOnly = true).ts)
 
   def versionAsOf(spark: SparkSession, baseDir: String,
       tsMillis: Long): Int =
@@ -5007,10 +4499,9 @@ object TimeTravel {
         s"version $v of $baseDir has no commit record (vacuumed away): " +
           "the incremental window is not reconstructible — restart from " +
           "a full readVersion snapshot")
-      val lines = readRawLines(fs, deltaPath(baseDir, v))
-      val (adds, removes) = addsRemovesFrom(lines)
-      v -> (opFrom(lines) match {
-        case Some("append") => adds
+      val rec = readRecord(fs, deltaPath(baseDir, v))
+      v -> (rec.op match {
+        case Some("append") => rec.adds
         case Some("compact") => Nil // dataChange=false: already delivered
         case Some("repartition") => Nil // rows identical, dirs moved
         case Some("constraint") => Nil // metadata-only: no rows to deliver
@@ -5020,7 +4511,7 @@ object TimeTravel {
         case Some("colmap") =>
           colmapWindowVerdict(baseDir, v, consumerPinnedAt)
           Nil // metadata-only once the consumer reads the new names
-        case None if removes.isEmpty => adds // pre-#op log, provably adds-only
+        case None if rec.removes.isEmpty => rec.adds // pre-#op log, provably adds-only
         case other => throw new IllegalArgumentException(
           s"version $v of $baseDir is a " +
             s"${other.getOrElse("pre-metadata rewrite")} commit: an " +
@@ -5038,11 +4529,9 @@ object TimeTravel {
   private[graft] def addRowCounts(spark: SparkSession, baseDir: String,
       v: Int): Seq[(String, (Option[Long], Option[Long]))] = {
     val fs = hadoopFs(spark, baseDir)
-    val lines = readRawLines(fs, deltaPath(baseDir, v))
-    val stats = statsFrom(lines)
-    addsRemovesFrom(lines)._1
-      .map(f => f -> ((stats.get(f).flatMap(parseRowCount),
-        stats.get(f).flatMap(parseByteCount))))
+    val rec = readRecord(fs, deltaPath(baseDir, v))
+    rec.adds.map(f => f -> ((rec.stats.get(f).flatMap(parseRowCount),
+      rec.stats.get(f).flatMap(parseByteCount))))
   }
 
   /** The newest version at or below `fromVersion` whose committed
@@ -5065,7 +4554,7 @@ object TimeTravel {
     // deliver swapped column values
     val pinned = pinnedNames.toSeq
     (fromVersion to 1 by -1).find(v =>
-      schemaOfRecord(fs, baseDir, v)
+      recordAt(fs, baseDir, v).schema
         .exists(_.fieldNames.toSeq == pinned))
       .getOrElse(throw new IllegalStateException(
         s"no retained version of $baseDir carries this stream's pinned " +
@@ -5080,13 +4569,13 @@ object TimeTravel {
       files: Seq[String], schemaVersion: Int,
       emptyMsg: String): DataFrame = {
     val fs = hadoopFs(spark, baseDir)
-    val schema = schemaOfRecord(fs, baseDir, schemaVersion)
+    val rec = recordAt(fs, baseDir, schemaVersion)
     if (files.isEmpty) {
-      val s = schema.getOrElse(throw new IllegalArgumentException(emptyMsg))
+      val s = rec.schema.getOrElse(
+        throw new IllegalArgumentException(emptyMsg))
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-    } else readFiles(spark, baseDir, files.sorted, schema,
-      activeColmap(fs, baseDir, schemaVersion)._1)
+    } else readFiles(spark, baseDir, files.sorted, rec.schema, rec.colmap)
   }
 
   /** Row-level change-type column every CDC row carries:
@@ -5159,23 +4648,21 @@ object TimeTravel {
       s"version $v of $baseDir has no commit record (vacuumed away): " +
         "the change window is not reconstructible — restart from a " +
         "full readVersion snapshot")
-    val lines = readRawLines(fs, deltaPath(baseDir, v))
-    val (adds, removes) = addsRemovesFrom(lines)
-    opFrom(lines) match {
+    val rec = readRecord(fs, deltaPath(baseDir, v))
+    rec.op match {
       case Some("append") =>
-        val stats = statsFrom(lines)
-        adds.sorted.map(f => CdcUnit(f, isAdd = true,
-          stats.get(f).flatMap(parseRowCount),
-          stats.get(f).flatMap(parseByteCount)))
-      case None if removes.isEmpty => // pre-#op adds-only: an append
-        adds.sorted.map(f => CdcUnit(f, isAdd = true, None))
+        rec.adds.sorted.map(f => CdcUnit(f, isAdd = true,
+          rec.stats.get(f).flatMap(parseRowCount),
+          rec.stats.get(f).flatMap(parseByteCount)))
+      case None if rec.removes.isEmpty => // pre-#op adds-only: an append
+        rec.adds.sorted.map(f => CdcUnit(f, isAdd = true, None))
       case Some("compact") | Some("constraint") | Some("bloomidx") |
            Some("protocol") | Some("evolve") | Some("repartition") => Nil
       case Some("colmap") =>
         colmapWindowVerdict(baseDir, v, consumerPinnedAt)
         Nil
       case op =>
-        val tok = cdcFrom(lines).getOrElse(
+        val tok = rec.cdc.getOrElse(
           throw new IllegalArgumentException(
             s"version $v of $baseDir is a ${op.getOrElse("rewrite")} " +
               "commit that recorded no change rows (changeFeed was " +
@@ -5202,16 +4689,15 @@ object TimeTravel {
       unitsByVersion: Seq[(Int, Seq[CdcUnit])],
       schemaVersion: Int): DataFrame = {
     val fs = hadoopFs(spark, baseDir)
-    val schema = schemaOfRecord(fs, baseDir, schemaVersion).getOrElse(
+    val delivery = recordAt(fs, baseDir, schemaVersion)
+    val schema = delivery.schema.getOrElse(
       throw new IllegalArgumentException(
         s"$baseDir's log records no schema — pre-metadata tables have " +
           "no change feed"))
-    val deliveryColmap = activeColmap(fs, baseDir, schemaVersion)._1
     val frames = unitsByVersion.flatMap { case (v, units) =>
       if (units.isEmpty) None
       else {
         val (addUnits, cdcFiles) = units.partition(_.isAdd)
-        val lines = readRawLines(fs, deltaPath(baseDir, v))
         val parts = Seq(
           // add files read under the DELIVERY version's schema+mapping
           // (files carry stable physical names), never the commit's own
@@ -5219,14 +4705,14 @@ object TimeTravel {
           // NULL-fill every column renamed between v and delivery
           if (addUnits.isEmpty) None
           else Some(readFiles(spark, baseDir,
-              addUnits.map(_.path).sorted, Some(schema), deliveryColmap)
+              addUnits.map(_.path).sorted, Some(schema), delivery.colmap)
             .withColumn(ChangeTypeCol, lit("insert"))),
           // captured change rows were written under v's LOGICAL names:
           // project them onto the delivery names via the physical names
           if (cdcFiles.isEmpty) None
           else Some(remapCaptureNames(
             spark.read.parquet(cdcFiles.map(_.path): _*),
-            colmapFrom(lines), deliveryColmap))
+            readRecord(fs, deltaPath(baseDir, v)).colmap, delivery.colmap))
         ).flatten
         parts.map(_.withColumn(CommitVersionCol, lit(v)))
           .reduceOption(_.unionByName(_, allowMissingColumns = true))
@@ -5299,19 +4785,18 @@ object TimeTravel {
     // window crosses, since files and captures project through stable
     // physical names
     val deliveryV = consumerPinnedAt.getOrElse(end)
-    val schema = schemaOfRecord(fs, baseDir, deliveryV).getOrElse(
+    val delivery = recordAt(fs, baseDir, deliveryV)
+    val schema = delivery.schema.getOrElse(
       throw new IllegalArgumentException(
         s"$baseDir's log records no schema — pre-metadata tables have " +
           "no change feed"))
-    val deliveryColmap = activeColmap(fs, baseDir, deliveryV)._1
     val frames = ((sinceVersion + 1) to end).flatMap { v =>
       require(entries.get(v).exists(_._2),
         s"version $v of $baseDir has no commit record (vacuumed away): " +
           "the change window is not reconstructible — restart from a " +
           "full readVersion snapshot")
-      val lines = readRawLines(fs, deltaPath(baseDir, v))
-      val (adds, removes) = addsRemovesFrom(lines)
-      opFrom(lines) match {
+      val rec = readRecord(fs, deltaPath(baseDir, v))
+      rec.op match {
         case Some("colmap") =>
           colmapWindowVerdict(baseDir, v, consumerPinnedAt)
           None // metadata-only once the consumer reads the new names
@@ -5319,10 +4804,10 @@ object TimeTravel {
         // acceptance readAppendsSince gives them. Adds read under the
         // DELIVERY schema+mapping (files carry stable physical names):
         // a rename between v and delivery projects, never NULL-fills
-        case Some("append") | None if removes.isEmpty =>
-          if (adds.isEmpty) None
-          else Some(readFiles(spark, baseDir, adds.sorted,
-            Some(schema), deliveryColmap)
+        case Some("append") | None if rec.removes.isEmpty =>
+          if (rec.adds.isEmpty) None
+          else Some(readFiles(spark, baseDir, rec.adds.sorted,
+            Some(schema), delivery.colmap)
             .withColumn(ChangeTypeCol, lit("insert"))
             .withColumn(CommitVersionCol, lit(v)))
         case Some("compact") => None // dataChange=false
@@ -5332,7 +4817,7 @@ object TimeTravel {
         case Some("protocol") => None // metadata-only commit
         case Some("evolve") => None // schema widening: metadata-only
         case op =>
-          val tok = cdcFrom(lines).getOrElse(
+          val tok = rec.cdc.getOrElse(
             throw new IllegalArgumentException(
               s"version $v of $baseDir is a ${op.getOrElse("rewrite")} " +
                 "commit that recorded no change rows (changeFeed was off " +
@@ -5344,7 +4829,7 @@ object TimeTravel {
           // captured rows carry v's LOGICAL names: project them onto
           // the delivery names via the stable physical names
           Some(remapCaptureNames(spark.read.parquet(cd.toString),
-            colmapFrom(lines), deliveryColmap)
+            rec.colmap, delivery.colmap)
             .withColumn(CommitVersionCol, lit(v)))
       }
     }

@@ -118,9 +118,8 @@ class BloomIndexSpec extends SparkSpec {
       assert(TimeTravel.latestVersion(spark, t) === 10)
     }
     val pq = tmpDir("bloom-ckpt-pq"); build(pq)
-    val txt = tmpDir("bloom-ckpt-txt")
-    try { TimeTravel.parquetCheckpoints = false; build(txt) }
-    finally TimeTravel.parquetCheckpoints = true
+    val txt = tmpDir("bloom-ckpt-txt"); build(txt)
+    assert(TextCheckpoints.rewrite(spark, txt) === Seq(10))
     Seq(pq, txt).foreach { t =>
       (1 until 10).foreach { v =>
         new java.io.File(s"$t/_graft_log/$v.delta").delete()

@@ -138,7 +138,8 @@ class ChangeFeedSpec extends SparkSpec {
     val v = TimeTravel.commitWithRebase(spark, fs, dir, prev = 1,
       dirs = Set("part=p1"), adds = adds, removes = removes, txn = None,
       batchSchema = schema, op = "upsert", evolveSchema = false,
-      cdc = Some(tok))
+      cdc = Some(tok),
+      prevRec = TimeTravel.recordAt(fs, dir, 1))
     assert(v === 3) // rebased past the append
     val feed = TimeTravel.readChangesSince(spark, dir, 2)
     assert(changes(feed) === Set(

@@ -35,7 +35,8 @@ class ConcurrencySpec extends SparkSpec {
     val schema = TimeTravel.readVersion(spark, dir, 1).schema
     val v = TimeTravel.commitWithRebase(spark, fs, dir, prev = 1,
       dirs = Set("part=p2"), adds = adds, removes = Nil, txn = None,
-      batchSchema = schema, op = "append", evolveSchema = false)
+      batchSchema = schema, op = "append", evolveSchema = false,
+      prevRec = TimeTravel.recordAt(fs, dir, 1))
     assert(v === 3)
     assert(TimeTravel.readVersion(spark, dir, 3).count() === 5)
     assert(TimeTravel.readVersion(spark, dir, 3)
@@ -59,7 +60,8 @@ class ConcurrencySpec extends SparkSpec {
     intercept[Exception](
       TimeTravel.commitWithRebase(spark, fs, dir, prev = 1,
         dirs = Set("part=p2"), adds = adds, removes = Nil, txn = None,
-        batchSchema = schema, op = "append", evolveSchema = false))
+        batchSchema = schema, op = "append", evolveSchema = false,
+        prevRec = TimeTravel.recordAt(fs, dir, 1)))
     assert(TimeTravel.latestVersion(spark, dir) === vRename,
       "the losing commit must not land past a concurrent rename")
   }
@@ -76,7 +78,8 @@ class ConcurrencySpec extends SparkSpec {
     val schema = TimeTravel.readVersion(spark, dir, 1).schema
     val v = TimeTravel.commitWithRebase(spark, fs, dir, prev = 1,
       dirs = Set("part=p3"), adds = Nil, removes = p3File, txn = None,
-      batchSchema = schema, op = "delete", evolveSchema = false)
+      batchSchema = schema, op = "delete", evolveSchema = false,
+      prevRec = TimeTravel.recordAt(fs, dir, 1))
     assert(v === 3)
     val rows = TimeTravel.readVersion(spark, dir, 3)
     assert(rows.count() === 2) // p3's row gone, p1's update kept
@@ -95,7 +98,8 @@ class ConcurrencySpec extends SparkSpec {
     val e = intercept[java.util.ConcurrentModificationException] {
       TimeTravel.commitWithRebase(spark, fs, dir, prev = 1,
         dirs = Set("part=p1"), adds = Nil, removes = p1File, txn = None,
-        batchSchema = schema, op = "delete", evolveSchema = false)
+        batchSchema = schema, op = "delete", evolveSchema = false,
+        prevRec = TimeTravel.recordAt(fs, dir, 1))
     }
     assert(e.getMessage.contains("part=p1"))
     // the table is untouched by the refused commit
@@ -118,7 +122,8 @@ class ConcurrencySpec extends SparkSpec {
     val e = intercept[java.util.ConcurrentModificationException] {
       TimeTravel.commitWithRebase(spark, fs, dir, prev = 1,
         dirs = Set("part=p1"), adds = Nil, removes = p1File, txn = None,
-        batchSchema = schema, op = "delete", evolveSchema = false)
+        batchSchema = schema, op = "delete", evolveSchema = false,
+        prevRec = TimeTravel.recordAt(fs, dir, 1))
     }
     assert(e.getMessage.contains("part=p1"))
     // ...while a DISJOINT-partition rewrite still rebases past it
@@ -126,7 +131,8 @@ class ConcurrencySpec extends SparkSpec {
       .filter(_.startsWith("part=p3/"))
     val v3 = TimeTravel.commitWithRebase(spark, fs, dir, prev = 1,
       dirs = Set("part=p3"), adds = Nil, removes = p3File, txn = None,
-      batchSchema = schema, op = "delete", evolveSchema = false)
+      batchSchema = schema, op = "delete", evolveSchema = false,
+      prevRec = TimeTravel.recordAt(fs, dir, 1))
     assert(v3 === 3)
     assert(TimeTravel.readVersion(spark, dir, v3)
       .select("id").as[Long].collect().toSet === Set(2L))
@@ -144,7 +150,8 @@ class ConcurrencySpec extends SparkSpec {
     val e = intercept[java.util.ConcurrentModificationException](
       TimeTravel.commitWithRebase(spark, fs, dir, prev = 1,
         dirs = Set("part=p2"), adds = adds, removes = Nil, txn = None,
-        batchSchema = schema, op = "append", evolveSchema = false))
+        batchSchema = schema, op = "append", evolveSchema = false,
+        prevRec = TimeTravel.recordAt(fs, dir, 1)))
     assert(e.getMessage.contains("bloom"))
     assert(TimeTravel.latestVersion(spark, dir) === vIdx)
   }
@@ -178,7 +185,8 @@ class ConcurrencySpec extends SparkSpec {
     val schema = TimeTravel.readVersion(spark, dir, 2).schema
     val v = TimeTravel.commitWithRebase(spark, fs, dir, prev = 2,
       dirs = Set("part=p2"), adds = inFlight, removes = Nil, txn = None,
-      batchSchema = schema, op = "append", evolveSchema = false)
+      batchSchema = schema, op = "append", evolveSchema = false,
+      prevRec = TimeTravel.recordAt(fs, dir, 2))
     assert(TimeTravel.readVersion(spark, dir, v)
       .filter(col("id") === 9L).count() === 1)
     // an ABANDONED stage (never committed) IS reclaimed past the age
@@ -207,7 +215,8 @@ class ConcurrencySpec extends SparkSpec {
       TimeTravel.commitWithRebase(spark, fs, dir, prev = 1,
         dirs = Set("part=p1"), adds = adds, removes = Nil,
         txn = Some(("streamX", 7L)), batchSchema = schema, op = "append",
-        evolveSchema = false)
+        evolveSchema = false,
+        prevRec = TimeTravel.recordAt(fs, dir, 1))
     }
     assert(e.getMessage.contains("streamX:7"))
     assert(TimeTravel.latestVersion(spark, dir) === 2) // no double-land
@@ -219,7 +228,8 @@ class ConcurrencySpec extends SparkSpec {
     val v = TimeTravel.commitWithRebase(spark, fs, dir, prev = 1,
       dirs = Set("part=p2"), adds = adds2, removes = Nil,
       txn = Some(("streamY", 7L)), batchSchema = schema, op = "append",
-      evolveSchema = false)
+      evolveSchema = false,
+      prevRec = TimeTravel.recordAt(fs, dir, 1))
     assert(v === 3)
   }
 

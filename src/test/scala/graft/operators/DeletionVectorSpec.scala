@@ -218,9 +218,8 @@ class DeletionVectorSpec extends SparkSpec {
         col("k") % 10 === 3, "p") === 10)
     }
     val pq = tmpDir("dv-ckpt-pq"); build(pq)
-    val txt = tmpDir("dv-ckpt-txt")
-    try { TimeTravel.parquetCheckpoints = false; build(txt) }
-    finally TimeTravel.parquetCheckpoints = true
+    val txt = tmpDir("dv-ckpt-txt"); build(txt)
+    assert(TextCheckpoints.rewrite(spark, txt) === Seq(10))
     // drop pre-checkpoint records in both: resolution must come from
     // the v10 checkpoint alone, bindings included
     Seq(pq, txt).foreach { t =>

@@ -152,8 +152,10 @@ class Round10PropertySpec extends SparkSpec {
 
   test("parquet and text checkpoints resolve identically on random histories, through vacuum, restore, constraints and renames") {
     // the same seeded op sequence replayed into two tables — one with
-    // parquet checkpoint sidecars (the default), one with legacy
-    // full-text manifests — must agree on EVERY version's content, the
+    // parquet checkpoint sidecars (what the writer produces), one whose
+    // checkpoints are rewritten as legacy full-text manifests
+    // (TextCheckpoints) after every op, so later ops resolve and
+    // commit on text-era bodies — must agree on EVERY version's content, the
     // history view, and post-vacuum resolution: format equivalence by
     // construction, not by parsing symmetry arguments
     // the value column's CURRENT logical name (rename arms flip it;
@@ -170,7 +172,8 @@ class Round10PropertySpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
         .toSeq.sorted
     }
-    def replay(dir: String, seed: Int): Int = {
+    val rewritten = scala.collection.mutable.Set.empty[Int]
+    def replay(dir: String, seed: Int, text: Boolean = false): Int = {
       val rnd = new scala.util.Random(seed)
       def someRows(n: Int): Vector[Row3] =
         Vector.fill(n)((rnd.nextInt(30).toLong, s"p${rnd.nextInt(5)}",
@@ -238,6 +241,7 @@ class Round10PropertySpec extends SparkSpec {
             }
             current
         }
+        if (text) rewritten ++= TextCheckpoints.rewrite(spark, dir)
       }
       TimeTravel.latestVersion(spark, dir)
     }
@@ -248,9 +252,10 @@ class Round10PropertySpec extends SparkSpec {
     val pqDir = tmpDir("tt-ckpt-pq")
     val txtDir = tmpDir("tt-ckpt-txt")
     val latestPq = replay(pqDir, 47)
-    val latestTxt =
-      try { TimeTravel.parquetCheckpoints = false; replay(txtDir, 47) }
-      finally TimeTravel.parquetCheckpoints = true
+    // the text arm: the same history, each checkpoint rewritten into
+    // the full-text body the pre-parquet writer produced as it lands
+    val latestTxt = replay(txtDir, 47, text = true)
+    assert(rewritten.nonEmpty)
     assert(latestPq === latestTxt)
     // the formats genuinely diverge on disk...
     assert(sidecars(pqDir).nonEmpty,
@@ -272,10 +277,7 @@ class Round10PropertySpec extends SparkSpec {
     // the parquet arm (only referenced sidecars survive)
     val floor = math.max(2, latestPq / 2)
     TimeTravel.vacuum(spark, pqDir, keepFrom = floor)
-    try {
-      TimeTravel.parquetCheckpoints = false
-      TimeTravel.vacuum(spark, txtDir, keepFrom = floor)
-    } finally TimeTravel.parquetCheckpoints = true
+    TimeTravel.vacuum(spark, txtDir, keepFrom = floor)
     (floor to latestPq).foreach { v =>
       assert(contentAny(pqDir, v) === contentAny(txtDir, v),
         s"version $v diverged after vacuum")
@@ -283,11 +285,10 @@ class Round10PropertySpec extends SparkSpec {
     val live = sidecars(pqDir)
     assert(live.forall(n => n.takeWhile(_ != '.').toInt >= floor),
       s"pre-floor sidecar survived vacuum: $live")
-    // a TEXT-era table vacuumed under the parquet default gets a
-    // parquet floor (forward migration works on old logs)
+    // a TEXT-era table vacuumed now gets a parquet floor (forward
+    // migration works on old logs)
     val txt2 = tmpDir("tt-ckpt-txt2")
-    try { TimeTravel.parquetCheckpoints = false; replay(txt2, 53) }
-    finally TimeTravel.parquetCheckpoints = true
+    replay(txt2, 53, text = true)
     val latest2 = TimeTravel.latestVersion(spark, txt2)
     val before = (2 to latest2).map(v => contentAny(txt2, v))
     TimeTravel.vacuum(spark, txt2, keepFrom = 2)
